@@ -1006,12 +1006,22 @@ object CurateMain {
         .write.mode("overwrite").parquet(vecCorpus)
       touchMarker(spark, s"$vecCorpus/_OK")
     }
-    val recRow = graft.streaming.VectorStreams.recallSnapshot(
-      dayVecs, ivfPath, vecCorpus, "vec_id", "embedding",
-      k = 10, nprobe = 4, maxQueries = 32, alertBelow = 0.7)
-    recRow.write.mode("overwrite")
-      .parquet(s"$workDir/monitor_recall/epoch=$me")
-    val rec = spark.read.parquet(s"$workDir/monitor_recall/epoch=$me")
+    // a day whose repair committed (or is mid-flight — the intent
+    // marker below) has its index evidence on record: the refit
+    // promoted new faces AFTER the recall and serving monitors measured
+    // the day's index, so a warm replay reads both committed rows back
+    // instead of re-measuring the promoted faces (which would rewrite
+    // the day's record with numbers no first run ever produced)
+    val refitQc = s"$workDir/refit_qc/day=$day"
+    val dayRepaired = hasMarker(spark, s"$refitQc/_DONE") ||
+      hasMarker(spark, s"$refitQc/_INTENT")
+    val recMon = s"$workDir/monitor_recall/epoch=$me"
+    if (!dayRepaired)
+      graft.streaming.VectorStreams.recallSnapshot(
+          dayVecs, ivfPath, vecCorpus, "vec_id", "embedding",
+          k = 10, nprobe = 4, maxQueries = 32, alertBelow = 0.7)
+        .write.mode("overwrite").parquet(recMon)
+    val rec = spark.read.parquet(recMon)
       .select($"recall", $"alert").as[(Double, Boolean)].head()
     // ---- serving epilogue: build the residual-PQ face over THIS
     // corpus's (appended) IVF index and QC-gate it before anything
@@ -1051,10 +1061,7 @@ object CurateMain {
     // healthy, the alert would flip off, and the replay's summary
     // (refitRan=false, evidence gone) would contradict the committed
     // repair. The alarm is part of the day's record: replays read it.
-    val refitQc = s"$workDir/refit_qc/day=$day"
     val servMon = s"$workDir/monitor_pq_agreement/epoch=$me"
-    val dayRepaired = hasMarker(spark, s"$refitQc/_DONE") ||
-      hasMarker(spark, s"$refitQc/_INTENT")
     val servRow =
       if (dayRepaired) spark.read.parquet(servMon)
       else {
@@ -1084,11 +1091,11 @@ object CurateMain {
         // ported here; r19 keys the record by day so day 3's alert can
         // repair again): a WARM replay of this day re-reads the same
         // committed index and re-derives the same alert, but the
-        // repair already committed — re-firing would churn the index
-        // with a fresh KMeans on every replay (a refit is not
-        // replay-pure) and double-bill the rebuild. The committed
-        // refit_qc record (marker written after the QC row) IS the
-        // day's repair; replays read it back.
+        // repair already committed — re-firing would bill a second full
+        // rebuild that can only re-derive the faces already promoted
+        // (the fits are functions of the indexed rows, Ivf.fitLayout).
+        // The committed refit_qc record (marker written after the QC
+        // row) IS the day's repair; replays read it back.
         if (hasMarker(spark, s"$refitQc/_DONE")) {
           val post = spark.read.parquet(refitQc)
           (true, post.select($"staged_agreement").as[Double].head(),

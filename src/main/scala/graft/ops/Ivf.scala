@@ -844,15 +844,48 @@ object Ivf {
         max(col("__rn")).as("max_res_norm"))
   }
 
-  /** Fit centroids and assign every row to its cell. */
+  /** Rows per partition of a fit's canonical input layout
+    * ([[fitLayout]]): inputs up to this size fit in one partition, so
+    * every fixture-scale fit is single-partition, while a corpus-sized
+    * fit still spreads over ceil(n / 65536) tasks.
+    */
+  private[ops] val FitRowsPerPartition: Long = 1L << 16
+
+  /** The canonical input layout every KMeans fit here runs over:
+    * hash-partitioned on the id into a partition count derived from the
+    * row count alone, each partition sorted by (id, vector). Spark ML
+    * KMeans seeds its k-means|| initialisation per partition index and
+    * reduces its Lloyd sums in partition order, so a fit over whatever
+    * partitioning its input happens to have changes with the core
+    * count, the file packing of a re-read table and AQE's coalescing.
+    * Over this layout the fit is a function of the rows alone. Cost:
+    * one count and one shuffle of the fit input.
+    */
+  private[ops] def fitLayout(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame = {
+    val n = df.count()
+    val parts = math.max(1L,
+      (n + FitRowsPerPartition - 1) / FitRowsPerPartition)
+    df.repartition(parts.toInt, col(idCol))
+      .sortWithinPartitions(col(idCol), col(vecCol))
+  }
+
+  /** Fit centroids and assign every row to its cell.
+    *
+    * The centroids are a function of the rows (and `k`, `seed`), not of
+    * their partitioning or the session's core count: the KMeans fit
+    * runs over [[fitLayout]]. Ids should be unique; rows that share an
+    * id and a vector are interchangeable, so even then the fit is fixed.
+    */
   def build(df: DataFrame, idCol: String, vecCol: String,
       k: Int = 16, seed: Long = 42L): Index = {
-    val feats = df.select(col(idCol), col(vecCol),
+    def featurize(d: DataFrame) = d.select(col(idCol), col(vecCol),
       array_to_vector(col(vecCol)).as("__features"))
     val model = new KMeans().setK(k).setSeed(seed)
       .setFeaturesCol("__features").setPredictionCol("cluster")
-      .fit(feats)
-    val assigned = model.transform(feats).drop("__features")
+      .fit(featurize(fitLayout(df.select(col(idCol), col(vecCol)),
+        idCol, vecCol)))
+    val assigned = model.transform(featurize(df)).drop("__features")
     Index(model.clusterCenters.map(_.toArray), assigned)
   }
 

@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   * in both dimensions at once; a linear sort leaves the second
   * dimension's min/max spanning the full domain in every row group.
   *
-  * 100 TB shape: the layout write is one range repartition on the
-  * z-value (sampled range boundaries → balanced files) + a within-
-  * partition sort — exactly the shuffle a plain global sort costs, paid
-  * once at write time to make every subsequent box scan prune. The
-  * z-value itself is a closed-form bit-interleave projection: fixed
-  * fan-in, codegen'd, no shuffle, no UDF.
+  * 100 TB shape: the layout write is one aggregation of a bounded
+  * z-histogram (at most 2^16 groups; exact equi-depth file boundaries
+  * → balanced files) + one shuffle to those files + a within-partition
+  * sort — the shuffle a plain global sort costs, paid once at write
+  * time to make every subsequent box scan prune. The z-value itself is
+  * a closed-form bit-interleave projection: fixed fan-in, codegen'd,
+  * no shuffle, no UDF.
   */
 object Layout {
 
@@ -64,19 +65,75 @@ object Layout {
         s"(($b >> $i) & 1) * ${1L << (2 * i + 1)}")
     }.mkString(" + ")
 
+  /** Resolution of the z-histogram [[zorderWrite]] cuts files from:
+    * the top 16 bits of the curve, so the histogram has at most 65,536
+    * groups however wide `bits` is.
+    */
+  private val HistBits = 16
+
   /** Write `df` z-order-clustered on (`colA`, `colB`) (low `bits` bits
     * of each, which must be non-negative — bucketize upstream) into
-    * `numFiles` range-partitioned parquet files at `path`. Range
-    * boundaries come from Spark's reservoir sample of the z-values, so
-    * files are balanced even when the key distribution is skewed.
+    * `numFiles` parquet files at `path`, each a contiguous z-range.
+    * File boundaries are the exact equi-depth cuts of the z-histogram,
+    * so files are balanced even when the key distribution is skewed (to
+    * within one histogram bucket), and the layout is a function of the
+    * rows alone. (Spark's `repartitionByRange` is not: its reservoir
+    * sample is seeded by the RDD id, so the same rows land in different
+    * files depending on how many RDDs the session made before.)
     */
   def zorderWrite(df: DataFrame, colA: String, colB: String, path: String,
-      numFiles: Int, bits: Int = 8): Unit =
-    df.withColumn("__z", zValue(col(colA), col(colB), bits))
-      .repartitionByRange(numFiles, col("__z"))
+      numFiles: Int, bits: Int = 8): Unit = {
+    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val z = df.withColumn("__z", zValue(col(colA), col(colB), bits))
+    val shift = math.max(0, 2 * bits - HistBits)
+    val hist = z.groupBy(shiftright(col("__z"), shift).as("__b")).count()
+      .orderBy("__b").as[(Long, Long)].collect()
+    val bounds = equiDepthBounds(hist, numFiles)
+    val zi = z.schema.fieldIndex("__z")
+    // an Int key k < numFiles hashes to partition k under
+    // HashPartitioner, so file f is exactly partition f
+    val files = z.rdd
+      .map(r => (upperBound(bounds, r.getLong(zi) >>> shift), r))
+      .partitionBy(new org.apache.spark.HashPartitioner(numFiles))
+      .values
+    spark.createDataFrame(files, z.schema)
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** First bucket of each file 1..n−1 over a bucket-ordered histogram:
+    * file f starts at the first bucket preceded by at least f/n of the
+    * rows. Files past the last bucket get `Long.MaxValue` and stay
+    * empty.
+    */
+  private def equiDepthBounds(hist: Array[(Long, Long)],
+      numFiles: Int): Array[Long] = {
+    val n = hist.map(_._2).sum
+    val bounds = Array.fill(numFiles - 1)(Long.MaxValue)
+    var cum = 0L
+    var f = 1
+    hist.foreach { case (bucket, c) =>
+      while (f < numFiles && cum * numFiles >= f.toLong * n) {
+        bounds(f - 1) = bucket; f += 1
+      }
+      cum += c
+    }
+    bounds
+  }
+
+  /** Number of `bounds` <= `b`: the file a bucket falls in. */
+  private def upperBound(bounds: Array[Long], b: Long): Int = {
+    var lo = 0
+    var hi = bounds.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (bounds(mid) <= b) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
 
   /** Row groups a stats-aware reader must touch for the box predicate
     * `aRange ∧ bRange`, counted directly from the parquet footers:

@@ -133,6 +133,11 @@ object Pq {
     * (optionally a deterministic hash sample). Seeds differ per
     * subspace so identical subspace distributions don't produce
     * identical codebooks.
+    *
+    * The codebooks are a function of the rows (and the parameters), not
+    * of `assigned`'s partitioning or the session's core count: the
+    * residuals are laid out once by [[Ivf.fitLayout]] and every
+    * subspace fit reads that one cached layout.
     */
   def fitCodebooks(assigned: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], m: Int, ksub: Int,
@@ -145,12 +150,13 @@ object Pq {
     val dsub = d / m
     val src0 = if (fitSampleRate < 1.0)
       Sampling.hashSample(assigned, idCol, fitSampleRate) else assigned
-    val src = src0
-      .where(col(vecCol).isNotNull)
+    val src = Ivf.fitLayout(src0.where(col(vecCol).isNotNull)
+        .select(col(idCol), col(vecCol), col("cluster")), idCol, vecCol)
       .select(GraftFunctions.centroidResidual(
         col(vecCol).cast("array<double>"), col("cluster").cast("int"),
         typedLit(centroids.flatten.toSeq)).as("__r"))
-    val books = (0 until m).map { sub =>
+      .persist()
+    val books = try (0 until m).map { sub =>
       val feats = src.select(array_to_vector(
         slice(col("__r"), sub * dsub + 1, dsub)).as("__features"))
       val model = new KMeans().setK(ksub).setSeed(seed + sub)
@@ -159,7 +165,7 @@ object Pq {
         s"subspace $sub collapsed to ${model.clusterCenters.length} centroids" +
           s" (< ksub=$ksub): corpus has too few distinct residual subvectors")
       model.clusterCenters.map(_.toArray)
-    }.toArray
+    }.toArray finally src.unpersist()
     Model(m, ksub, dsub, books)
   }
 

@@ -7,19 +7,32 @@ import graft.sources.Tables
   * score that sums floating-point-derived terms must give identical
   * bytes under any repartitioning — the property the DuckDB oracles
   * rely on, checked here directly against adversarial partitionings
-  * (1 partition vs 17 skewed ones reverses most sum orders).
+  * (1 partition vs 17 skewed ones reverses most sum orders). The fitted
+  * vector artifacts (IVF centroids, PQ codebooks) are held to the same
+  * contract: the fit is a function of the rows, not of their layout.
   */
 class DeterminismSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val docs = Tables(spark, sf, "documents")
 
-  private def stable[T](f: org.apache.spark.sql.DataFrame => Seq[T]): Unit = {
-    val one = f(docs.repartition(1))
-    val many = f(docs.repartition(17, $"lang"))
+  private lazy val vecs = Tables(spark, sf, "embeddings")
+
+  private def stable[T](f: org.apache.spark.sql.DataFrame => Seq[T]): Unit =
+    stableOver(docs, $"lang")(f)
+
+  private def stableOver[T](df: org.apache.spark.sql.DataFrame,
+      skewCol: org.apache.spark.sql.Column)(
+      f: org.apache.spark.sql.DataFrame => Seq[T]): Unit = {
+    val one = f(df.repartition(1))
+    val many = f(df.repartition(17, skewCol))
     assert(one == many, "result drifted under repartitioning")
     Staged.releaseAll()
   }
+
+  /** Exact bit patterns: a fitted artifact must match byte for byte. */
+  private def bits(rows: Array[Array[Double]]): Seq[Seq[Long]] =
+    rows.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
 
   test("DSIR weights are partition-order-independent") {
     stable(d => Dsir.importanceWeights(
@@ -68,5 +81,17 @@ class DeterminismSpec extends SparkSpec {
   test("novelty scores are partition-order-independent") {
     stable(d => TextAnalysis.ngramNovelty(d, "doc_id", "text", n = 3)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq)
+  }
+
+  test("IVF centroids are partition-layout-independent") {
+    stableOver(vecs, $"label")(d =>
+      bits(Ivf.build(d, "vec_id", "embedding", k = 8).centroids))
+  }
+
+  test("PQ codebooks are partition-layout-independent") {
+    val idx = Ivf.build(vecs, "vec_id", "embedding", k = 8)
+    stableOver(idx.assigned, $"cluster")(d =>
+      Pq.fitCodebooks(d, "vec_id", "embedding", idx.centroids, m = 4,
+        ksub = 16).codebooks.toSeq.map(bits))
   }
 }

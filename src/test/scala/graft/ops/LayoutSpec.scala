@@ -48,4 +48,22 @@ class LayoutSpec extends SparkSpec {
       .where(col("a").between(0, 15) && col("b").between(0, 15)).count()
     assert(fromZ == 16 * 16 * 4)
   }
+
+  test("z-order layout is a function of the rows: a rewrite lands every row in the same file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val grid = spark.range(16384)
+      .select((col("id") % 64).as("a"), (shiftright(col("id"), 6) % 64).as("b"))
+    // per file: row count and the (a, b) box its stats describe
+    def files(p: String) = spark.read.parquet(p)
+      .groupBy(input_file_name().as("f"))
+      .agg(count(lit(1)), min("a"), max("a"), min("b"), max("b"))
+      .drop("f").as[(Long, Long, Long, Long, Long)].collect().toSet
+    Layout.zorderWrite(grid, "a", "b", s"$dir/z1", numFiles = 16, bits = 6)
+    Layout.zorderWrite(grid.repartition(7), "a", "b", s"$dir/z2",
+      numFiles = 16, bits = 6)
+    val (f1, f2) = (files(s"$dir/z1"), files(s"$dir/z2"))
+    assert(f1 == f2, s"the same rows laid out differently: $f1 vs $f2")
+    // equi-depth on a uniform grid: 16 files of 1024 rows
+    assert(f1.size == 16 && f1.forall(_._1 == 1024L), s"unbalanced files: $f1")
+  }
 }
