@@ -30,7 +30,7 @@ object ConnectorRunner {
     val missing = cfg.requiredEnv.filterNot(sys.env.contains)
     require(missing.isEmpty, s"connector ${cfg.name}: missing env ${missing.mkString(",")}")
     val raw = cfg.source(spark)
-    // persist: isEmpty + the sink's count + write would otherwise each
+    // persist: isEmpty and the sink's write would otherwise each
     // re-execute the source — for an HTTP source that re-fetches every
     // page against a rate-limited API
     val transformed = Transforms.pipeline(cfg.stages: _*)(raw).persist()

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -529,9 +530,24 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         es.head, es(1))))
 
+  /** Registries already populated, held weakly and compared by identity:
+    * a session's registry is a fresh instance (a cloned session's too),
+    * so each one is filled once. Testing for the names instead would
+    * also match a Spark built-in of the same name.
+    */
+  private val populated = java.util.Collections.newSetFromMap(
+    new com.google.common.collect.MapMaker().weakKeys()
+      .makeMap[FunctionRegistry, java.lang.Boolean]())
+
   /** Idempotent per-session registration (temp functions). */
-  def register(spark: SparkSession): Unit = builders.foreach { case (name, b) =>
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!populated.contains(registry)) {
+      builders.foreach { case (name, b) =>
+        registry.createOrReplaceTempFunction(name, b, "built-in")
+      }
+      populated.add(registry): Unit
+    }
   }
 
   def minhashSig(hashes: Column, numHashes: Int): Column =

@@ -1,6 +1,8 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.io.{File, IOException}
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** The reference's Load stage (README.md:24, :27-29): insert transformed
@@ -14,6 +16,18 @@ import org.apache.spark.sql.functions._
 trait GraftSink {
   /** Write a batch; returns the number of rows written. */
   def write(df: DataFrame): Long
+}
+
+object GraftSink {
+  /** Runs `save` on `df` and returns the rows it wrote, counted by an
+    * [[Observation]] on the write itself rather than by a second action
+    * over the same frame.
+    */
+  def countingWrite(df: DataFrame)(save: DataFrame => Unit): Long = {
+    val obs = Observation()
+    save(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
 }
 
 /** Append/overwrite a parquet "collection" ([[FormatSink]] fixed to
@@ -37,43 +51,73 @@ final case class ParquetSink(path: String, mode: SaveMode = SaveMode.Append)
 final case class FormatSink(path: String, format: String,
     mode: SaveMode = SaveMode.Append,
     options: Map[String, String] = Map.empty) extends GraftSink {
-  def write(df: DataFrame): Long = {
-    val n = df.count()
-    df.write.mode(mode).options(options).format(format).save(path)
-    n
-  }
+  def write(df: DataFrame): Long =
+    GraftSink.countingWrite(df)(_.write.mode(mode).options(options).format(format).save(path))
 }
 
 /** L2 — idempotent keyed upsert: incoming rows win over existing rows
   * with the same key; re-running the same load leaves the collection
   * unchanged. The anti-join touches only the key column of the incoming
-  * side, so at scale the build side stays small enough to broadcast.
+  * side, so at scale the build side stays small enough to broadcast; a
+  * left-anti join keeps the same rows whether or not build-side keys
+  * repeat, so the keys are not de-duplicated (which would shuffle).
+  *
+  * Cost: one write of the merged collection, whose row count rides that
+  * write as an [[Observation]]. Every load rewrites the whole collection;
+  * rewriting only the files whose keys overlap the batch (file-level
+  * copy-on-write) would need a per-file key index, which the sink does
+  * not keep.
+  *
+  * Commit protocol. The merged collection is written to
+  * `<path>.staging`, whose parquet `_SUCCESS` marker is the commit
+  * point; then `rename(path -> path.old)`, `rename(staging -> path)`,
+  * delete `.old`. `path` is never rewritten in place, and `.old` only
+  * exists once the staging write has committed. Every write first
+  * recovers from a crash at any of these points:
+  *  - `path` present: a `.staging`, complete or not, is a load whose
+  *    swap never began (its call never returned), and an `.old` is the
+  *    previous collection of a finished swap; both are deleted;
+  *  - `path` missing, `.staging` complete: the crash came between the
+  *    two renames, or before a first load's only rename; roll forward by
+  *    renaming `.staging` to `path`, then delete any `.old`;
+  *  - `path` missing, `.staging` incomplete or absent, `.old` present:
+  *    roll back by renaming `.old` to `path`.
+  * Without this, a crash between the renames would make the next load
+  * see no collection and keep only its own batch.
   */
 final case class UpsertParquetSink(path: String, keys: Seq[String])
     extends GraftSink {
   def write(incoming: DataFrame): Long = {
-    val spark = incoming.sparkSession
-    val exists = new java.io.File(path).exists()
+    val live = new File(path)
+    val staging = new File(path + ".staging")
+    val old = new File(path + ".old")
+    recover(live, staging, old)
+    val exists = live.exists()
     val merged =
       if (!exists) incoming
-      else {
-        val existing = spark.read.parquet(path)
-        existing.join(
-          broadcast(incoming.select(keys.map(incoming.col): _*).distinct()),
-          keys, "left_anti")
-          .unionByName(incoming)
-      }
-    // Self-referential overwrite: materialize to a staging dir first.
-    val staging = path + ".staging"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    val out = spark.read.parquet(staging)
-    val n = out.count()
-    out.write.mode(SaveMode.Overwrite).parquet(path)
-    deleteRecursively(new java.io.File(staging))
+      else incoming.sparkSession.read.parquet(path)
+        .join(broadcast(incoming.select(keys.map(incoming.col): _*)), keys, "left_anti")
+        .unionByName(incoming)
+    val n = GraftSink.countingWrite(merged)(_.write.parquet(staging.getPath))
+    if (exists) rename(live, old)
+    rename(staging, live)
+    deleteRecursively(old)
     n
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private def recover(live: File, staging: File, old: File): Unit = {
+    if (!live.exists()) {
+      if (new File(staging, "_SUCCESS").exists()) rename(staging, live)
+      else if (old.exists()) rename(old, live)
+    }
+    deleteRecursively(staging)
+    deleteRecursively(old)
+  }
+
+  private def rename(from: File, to: File): Unit =
+    if (!from.renameTo(to)) throw new IOException(s"upsert: cannot rename $from to $to")
+
+  private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
     f.delete(): Unit
   }

@@ -4,11 +4,17 @@ import graft.SparkSpec
 import graft.sources.Tables
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
-/** File-format sinks/scans beyond parquet, and bucketed co-located joins
-  * (the storage-layout piece of the 100 TB story).
+/** File-format sinks/scans beyond parquet, the sinks' one-write loads and
+  * the upsert's crash recovery, and bucketed co-located joins (the
+  * storage-layout piece of the 100 TB story).
   */
 class SinksSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -55,6 +61,64 @@ class SinksSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     sink.write(events.limit(10))
     sink.write(events.limit(5))
     assert(spark.read.orc(dir).count() == 15)
+  }
+
+  test("FormatSink.write is one SQL action and returns the rows it wrote") {
+    val input = events // resolved before the listener counts anything
+    for (format <- Seq("parquet", "orc")) {
+      val dir = Files.createTempDirectory(s"graft-$format-actions").toString + "/out"
+      val actions = new AtomicInteger()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          actions.incrementAndGet(): Unit
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+          actions.incrementAndGet(): Unit
+      }
+      ListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val n = try FormatSink(dir, format).write(input) finally {
+        ListenerBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      assert(actions.get == 1, s"$format: SQL actions in one write")
+      assert(n == spark.read.format(format).load(dir).count(), s"$format: rows written")
+      assert(n == input.count(), s"$format: rows in")
+    }
+  }
+
+  test("upsert recovers from a crash at each point of its commit") {
+    def write(rows: Seq[(Long, String)], dir: String): Unit =
+      rows.toDF("id", "v").write.parquet(dir)
+    val base = Seq(1L -> "a", 2L -> "b")
+    // a load merged and staged, but never acknowledged, before the crash
+    val staged = base :+ (4L -> "d")
+    val batch = Seq(2L -> "B", 3L -> "c")
+    val cases: Seq[(String, String => Unit, Seq[(Long, String)])] = Seq(
+      ("(a) staging complete, path present",
+        p => { write(base, p); write(staged, p + ".staging") },
+        Seq(1L -> "a", 2L -> "B", 3L -> "c")),
+      ("(b) path renamed to .old, staging complete",
+        p => { write(base, p + ".old"); write(staged, p + ".staging") },
+        Seq(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "d")),
+      ("(c) staging without _SUCCESS, path present",
+        p => {
+          write(base, p); write(staged, p + ".staging")
+          assert(new File(p + ".staging/_SUCCESS").delete())
+        },
+        Seq(1L -> "a", 2L -> "B", 3L -> "c")),
+      ("(d) only .old present",
+        p => write(base, p + ".old"),
+        Seq(1L -> "a", 2L -> "B", 3L -> "c")))
+    for ((state, setUp, expected) <- cases) {
+      val path = Files.createTempDirectory("graft-upsert-crash").toString + "/coll"
+      setUp(path)
+      val n = UpsertParquetSink(path, Seq("id")).write(batch.toDF("id", "v"))
+      val got = spark.read.parquet(path).as[(Long, String)].collect().sortBy(_._1).toSeq
+      assert(got == expected, state)
+      assert(n == spark.read.parquet(path).count(), s"$state: rows written")
+      assert(!new File(path + ".staging").exists() && !new File(path + ".old").exists(),
+        s"$state: the commit leaves no .staging or .old")
+    }
   }
 
   test("bucketed tables join without a shuffle exchange") {
