@@ -9,12 +9,15 @@ object Bench {
 
   /** Lenient regex parse (deliberately not a JSON lib) so a
     * hand-edited or older-schema file degrades to "no history", and a
-    * history from a different sf degrades to empty — a 2x threshold is
-    * only meaningful against a sweep at the SAME scale factor.
+    * history from a different sf or core count (or one that does not
+    * record its cores) degrades to empty — a 2x threshold is only
+    * meaningful against a sweep at the SAME scale factor on the SAME
+    * number of cores.
     */
-  def parseHistory(txt: String, sfDir: String): Map[String, Hist] = try {
+  def parseHistory(txt: String, sfDir: String, cores: Int): Map[String, Hist] = try {
     val histSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    if (!histSf.contains(sfDir)) Map.empty
+    val histCores = """"cores":([0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+    if (!histSf.contains(sfDir) || !histCores.contains(cores)) Map.empty
     else {
       def num(body: String, field: String): Option[Double] =
         ("\"" + field + "\":([-0-9.Ee]+)").r
@@ -127,14 +130,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // warm up JVM/session so init cost isn't billed to the first query;
     // best-effort — a warm-up failure must not kill the whole bench
     try {
@@ -168,8 +164,8 @@ object Bench {
     // driver-side planning, and that path runs ~2x faster once the JIT
     // has seen a few hundred plans — measured: a04 warm floor is
     // ~0.52 s when it runs FIRST in a fresh session vs ~0.27 s after a
-    // full suite pass, with identical Spark-job times (DebugA04). One
-    // untimed pass makes every query's timing position-independent, so
+    // full suite pass, with identical Spark-job times (BASELINE.md,
+    // round 12). One untimed pass makes every query's timing position-independent, so
     // a key-set change can never again masquerade as a regression.
     selected.foreach { case (_, fn) =>
       try { run1(fn) } catch { case _: Throwable => () }
@@ -234,7 +230,8 @@ object Bench {
     // so lookups try the short key first and fall back to the full name
     // (the ratchet survives the schema transition).
     val hist: Map[String, Hist] = try {
-      parseHistory(scala.io.Source.fromFile("BENCH_FULL.json").mkString, sfDir)
+      parseHistory(scala.io.Source.fromFile("BENCH_FULL.json").mkString, sfDir,
+        GraftSession.cpus)
     } catch { case _: Throwable => Map.empty }
     def short(name: String): String = name.takeWhile(_ != '_')
     val keyOf: String => String =
@@ -414,9 +411,9 @@ object Bench {
       okResults.map { case (k, (ts, _, hotSig, _)) => best(k, ts, hotSig)._1 }.sum else 0.0
     val errField = if (errResults.nonEmpty) s""","errors":$errList""" else ""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$errField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$errField,"sf":"$sfDir","cores":${GraftSession.cpus}}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","gate":$gate,"queries":$qsFull$errField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","gate":$gate,"queries":$qsFull$errField,"sf":"$sfDir","cores":${GraftSession.cpus}}"""
     // a FILTERED run must not clobber the full-sweep median history —
     // overwriting would silently disable the self-defense pass for every
     // query outside the filter on the next full sweep

@@ -134,14 +134,7 @@ object CurateMain {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = rest.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-curate").toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-curate")
     if (incremental) println(ingestDay(spark, sfDir, outDir, day).json)
     else println(run(spark, sfDir, outDir).json)
     spark.stop()

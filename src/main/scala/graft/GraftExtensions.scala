@@ -3,40 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions._
+import graft.functions.GraftFunctions
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * functions available in any session built with
-  * `.withExtensions(new GraftExtensions)` or via
-  * `spark.sql.extensions=graft.GraftExtensions` — the deployment path
-  * for a cluster where users only touch SQL.
+/** The one place the engine is installed into a session: every entry of
+  * [[GraftFunctions.builders]] under its SQL name, and the
+  * [[graft.plans.AsOfJoinStrategy]] that plans `AsOfJoinNode` as the
+  * co-partitioned sort-merge `AsOfJoinExec`. [[GraftSession.builder]]
+  * applies it to every session it builds; on a cluster where users only
+  * touch SQL, `spark.sql.extensions=graft.GraftExtensions` does the same.
   *
-  * (GraftSession.local also registers them imperatively for programmatic
-  * sessions; both paths share the same builders.)
+  * The DataFrame API does not depend on it: the `GraftFunctions` column
+  * helpers build their expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String) =
-      new ExpressionInfo("graft", null, name, usage, "")
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(hashes, k) - MinHash signature of a hashed set"),
-      es => MinHashSig(es.head,
-        es(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("ngram_hashes"),
-      info("ngram_hashes", "ngram_hashes(tokens, n) - sorted distinct n-gram hashes"),
-      es => NgramHashes(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("jaccard_sorted"),
-      info("jaccard_sorted", "jaccard_sorted(a, b) - Jaccard of sorted hash sets"),
-      es => JaccardSorted(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(hashes) - 64-bit SimHash of token hashes"),
-      es => SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - double dot product of vectors"),
-      es => DotProduct(es.head, es(1))))
-    // whole-operator extension: plans graft.plans.AsOfJoinNode as the
-    // co-partitioned sort-merge AsOfJoinExec
+    GraftFunctions.builders.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, s"$name(...) - graft native function", ""),
+        build))
+    }
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
   }
 }

@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single place that builds the engine's SparkSession.
+/** The one place the engine's SparkSession is built: every main, the
+  * benchmark and the test suites go through [[builder]] or [[local]], so
+  * they all run the same configuration, and [[GraftExtensions]] installs
+  * the native SQL functions and the as-of join strategy into each
+  * session as it is built.
   *
   * Design notes (100 TB posture): everything here is plan-level
   * configuration — AQE on (runtime re-plan of shuffles / skew joins),
@@ -13,6 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
   def cpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
@@ -20,6 +25,7 @@ object GraftSession {
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -31,7 +37,6 @@ object GraftSession {
   def local(appName: String = "graft"): SparkSession = {
     val s = builder(appName).master(s"local[$cpus]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-side measurement harness (guide §1: measure first): run ONE
   * registered query with a listener that attributes wall-clock to the
@@ -9,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * — plus the gaps BETWEEN jobs (driver-side planning / eager
   * non-Spark work), which per-query bench numbers can't separate.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt 'runMain graft.Profile <sfDir> <query> [runs]'
-  * Not part of the driver contract; diagnostics only.
+  * Usage: sbt 'runMain graft.Profile <sfDir> <query> [runs]'
+  * (a [[GraftSession.local]] session: `SPARK_GRAFT_CPUS` cores, default
+  * every core). Diagnostics only; not part of the `SparkEntry` contract.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -27,14 +27,7 @@ object Profile {
     }
     val qname = qnameOpt.get
     val runs = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-profile")
     val fn = SparkEntry.queries(qname)
 
     final case class Job(id: Int, start: Long) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Ivf, Similarity, Staged}
 import graft.sources.Tables
@@ -59,13 +59,7 @@ object ScaleRehearsalAnn {
     if (args.headOption.contains("resize")) { runResizeCurve(args.drop(1)); return }
     val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10, 20)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-ann")
 
     val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val dim = base.select(size(col("embedding"))).head().getInt(0)
@@ -223,13 +217,7 @@ object ScaleRehearsalAnn {
   private def runRefitCurve(args: Array[String]): Unit = {
     val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-ann")
     val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val dim = base.select(size(col("embedding"))).head().getInt(0)
     def time(f: => Unit): Double = {
@@ -311,13 +299,7 @@ object ScaleRehearsalAnn {
   private def runResizeCurve(args: Array[String]): Unit = {
     val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(2, 4, 8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-ann")
     val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val dim = base.select(size(col("embedding"))).head().getInt(0)
     val n0 = base.count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Bpe, Staged}
 import graft.sources.Tables
@@ -41,14 +40,7 @@ object ScaleRehearsalBpe {
     if (args.headOption.contains("local")) { runLocalCurve(args.drop(1)); return }
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 5, 10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-scale-bpe")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-bpe")
     import spark.implicits._
 
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
@@ -96,14 +88,7 @@ object ScaleRehearsalBpe {
   private def runMergeCurve(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(16, 64, 256)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-scale-bpe-nmerges")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-bpe-nmerges")
     import spark.implicits._
     val corpus = Tables(spark, sfDir, "documents")
       .select($"doc_id",
@@ -139,14 +124,7 @@ object ScaleRehearsalBpe {
     val counts = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(256, 4096, 32768)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-scale-bpe-local")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-bpe-local")
     import spark.implicits._
     val corpus = Tables(spark, sfDir, "documents")
       .select($"doc_id",

@@ -32,13 +32,7 @@ object ScaleRehearsalCc {
       .select(col("u").as("id_a"), (col("u") + 1).as("id_b"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-cc")
 
     def measure(n: Long, chainLen: Int): Unit = {
       val pairs = chainGraph(spark, n, chainLen)

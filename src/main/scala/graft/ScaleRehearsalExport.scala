@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Curriculum, Layout, Sharding, TextAnalysis}
 import graft.sources.Tables
@@ -30,13 +29,7 @@ object ScaleRehearsalExport {
   def main(args: Array[String]): Unit = {
     val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-export")
     import spark.implicits._
 
     val base = Tables(spark, sfDir, "documents")

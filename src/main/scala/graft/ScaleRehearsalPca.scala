@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{EmbedStats, Ivf, Similarity, Staged}
 import graft.sources.Tables
@@ -60,14 +59,7 @@ object ScaleRehearsalPca {
     val k = posArgs.lift(1).map(_.toInt).getOrElse(10)
     val nQueries = posArgs.lift(2).map(_.toInt).getOrElse(64)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-scale-pca")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-pca")
     import spark.implicits._
 
     val raw = Tables(spark, sfDir, "embeddings").select($"vec_id", $"embedding")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Cooccur, Decontam, Dedup, Dsir, Scrub, Staged, TextAnalysis, TfIdf}
 import graft.sources.Tables
@@ -30,13 +29,7 @@ object ScaleRehearsalSelect {
   def main(args: Array[String]): Unit = {
     val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 5, 20)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-select")
 
     val base = Tables(spark, sfDir, "documents").select("doc_id", "text")
     // the target corpus is FIXED (the realistic shape: a curated

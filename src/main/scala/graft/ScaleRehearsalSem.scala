@@ -110,13 +110,7 @@ object ScaleRehearsalSem {
   def main(args: Array[String]): Unit = {
     val sfDirEarly = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (args.headOption.contains("recall")) {
-      val spark = SparkSession.builder()
-        .config("spark.sql.session.timeZone", "UTC")
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local("graft-scale-sem")
       val ts = if (args.length > 1) args.drop(1).map(_.toDouble).toSeq
         else Seq(0.2, 0.3, 0.5, 0.7)
       recallMode(spark, sfDirEarly, ts.sorted)
@@ -125,13 +119,7 @@ object ScaleRehearsalSem {
     }
     val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10, 20)
     val sfDir = sfDirEarly
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-sem")
 
     val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val dim = base.select(size(col("embedding"))).head().getInt(0)

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the hot loops of the dedup/similarity
@@ -503,75 +503,60 @@ case class CentroidResidual(vec: Expression, cluster: Expression,
       t: Expression): CentroidResidual = copy(vec = f, cluster = s, cents = t)
 }
 
-/** Session registration + Column-level API for the native expressions. */
+/** The native expressions' two front doors, both built from the one
+  * `builders` list:
+  *   - the Column helpers below construct each Catalyst expression
+  *     directly, so a DataFrame pipeline never looks up a function name
+  *     and needs nothing registered in its session;
+  *   - [[graft.GraftExtensions]] injects every `builders` entry under its
+  *     SQL name, which is how `spark.sql`/`expr` text reaches them in a
+  *     session built by [[graft.GraftSession]] (or configured with
+  *     `spark.sql.extensions=graft.GraftExtensions`).
+  */
 object GraftFunctions {
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "minhash_sig" -> (es => MinHashSig(es.head,
-      es(1).asInstanceOf[Literal].value.asInstanceOf[Number].intValue())),
+  private def intArg(e: Expression): Int =
+    e.asInstanceOf[Literal].value.asInstanceOf[Number].intValue()
+
+  /** SQL name → expression builder for every native function. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "minhash_sig" -> (es => MinHashSig(es.head, intArg(es(1)))),
     "jaccard_sorted" -> (es => JaccardSorted(es.head, es(1))),
     "ngram_hashes" -> (es => NgramHashes(es.head, es(1))),
     "simhash64" -> (es => SimHash64(es.head)),
     "dot_product" -> (es => DotProduct(es.head, es(1))),
-    "pq_encode" -> (es => PqEncode(es.head, es(1),
-      es(2).asInstanceOf[Literal].value.asInstanceOf[Number].intValue(),
-      es(3).asInstanceOf[Literal].value.asInstanceOf[Number].intValue())),
-    "pq_lookup_sum" -> (es => PqLookupSum(es.head, es(1),
-      es(2).asInstanceOf[Literal].value.asInstanceOf[Number].intValue())),
-    "pq_lookup_sum_at" -> (es => PqLookupSumAt(es.head, es(1), es(2),
-      es(3).asInstanceOf[Literal].value.asInstanceOf[Number].intValue())),
+    "pq_encode" -> (es => PqEncode(es.head, es(1), intArg(es(2)), intArg(es(3)))),
+    "pq_lookup_sum" -> (es => PqLookupSum(es.head, es(1), intArg(es(2)))),
+    "pq_lookup_sum_at" -> (es => PqLookupSumAt(es.head, es(1), es(2), intArg(es(3)))),
     "centroid_residual" -> (es => CentroidResidual(es.head, es(1), es(2))),
     // Spark's internal runtime-filter bloom expressions, surfaced for the
     // decontamination prefilter: both are codegen'd, and MightContain
     // deserializes its literal filter once per task, not per row.
-    "bloom_agg" -> (es =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es.head, es(1), es(2))),
-    "bloom_might_contain" -> (es =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        es.head, es(1))))
+    "bloom_agg" -> (es => new BloomFilterAggregate(es.head, es(1), es(2))),
+    "bloom_might_contain" -> (es => BloomFilterMightContain(es.head, es(1))))
 
-  /** Registries already populated, held weakly and compared by identity:
-    * a session's registry is a fresh instance (a cloned session's too),
-    * so each one is filled once. Testing for the names instead would
-    * also match a Spark built-in of the same name.
-    */
-  private val populated = java.util.Collections.newSetFromMap(
-    new com.google.common.collect.MapMaker().weakKeys()
-      .makeMap[FunctionRegistry, java.lang.Boolean]())
-
-  /** Idempotent per-session registration (temp functions). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!populated.contains(registry)) {
-      builders.foreach { case (name, b) =>
-        registry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-      populated.add(registry): Unit
-    }
-  }
+  private def expr(c: Column): Expression = PlanBridge.expression(c)
+  private def column(e: Expression): Column = PlanBridge.column(e)
 
   def minhashSig(hashes: Column, numHashes: Int): Column =
-    call_function("minhash_sig", hashes, org.apache.spark.sql.functions.lit(numHashes))
-  def jaccardSorted(a: Column, b: Column): Column = call_function("jaccard_sorted", a, b)
+    column(MinHashSig(expr(hashes), numHashes))
+  def jaccardSorted(a: Column, b: Column): Column =
+    column(JaccardSorted(expr(a), expr(b)))
   def ngramHashes(tokens: Column, n: Int): Column =
-    call_function("ngram_hashes", tokens, org.apache.spark.sql.functions.lit(n))
-  def simhash64(hashes: Column): Column = call_function("simhash64", hashes)
-  def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
+    column(NgramHashes(expr(tokens), Literal(n)))
+  def simhash64(hashes: Column): Column = column(SimHash64(expr(hashes)))
+  def dotProduct(a: Column, b: Column): Column =
+    column(DotProduct(expr(a), expr(b)))
   def pqEncode(vec: Column, books: Column, m: Int, ksub: Int): Column =
-    call_function("pq_encode", vec, books,
-      org.apache.spark.sql.functions.lit(m), org.apache.spark.sql.functions.lit(ksub))
+    column(PqEncode(expr(vec), expr(books), m, ksub))
   def pqLookupSum(codes: Column, lut: Column, ksub: Int): Column =
-    call_function("pq_lookup_sum", codes, lut,
-      org.apache.spark.sql.functions.lit(ksub))
+    column(PqLookupSum(expr(codes), expr(lut), ksub))
   def pqLookupSumAt(codes: Column, lut: Column, offset: Column, ksub: Int): Column =
-    call_function("pq_lookup_sum_at", codes, lut, offset,
-      org.apache.spark.sql.functions.lit(ksub))
+    column(PqLookupSumAt(expr(codes), expr(lut), expr(offset), ksub))
   def centroidResidual(vec: Column, cluster: Column, cents: Column): Column =
-    call_function("centroid_residual", vec, cluster, cents)
+    column(CentroidResidual(expr(vec), expr(cluster), expr(cents)))
   def bloomAgg(h: Column, estimatedItems: Long, numBits: Long): Column =
-    call_function("bloom_agg", h,
-      org.apache.spark.sql.functions.lit(estimatedItems),
-      org.apache.spark.sql.functions.lit(numBits))
+    column(new BloomFilterAggregate(expr(h), Literal(estimatedItems), Literal(numBits))
+      .toAggregateExpression())
   def bloomMightContain(bloom: Column, h: Column): Column =
-    call_function("bloom_might_contain", bloom, h)
+    column(BloomFilterMightContain(expr(bloom), expr(h)))
 }

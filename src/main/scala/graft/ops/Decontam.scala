@@ -23,7 +23,6 @@ object Decontam {
     */
   private def docHashes(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col(idCol),
       explode(Dedup.shingleHashSet(col(textCol), n)).as("h"))
   }
@@ -31,7 +30,6 @@ object Decontam {
   /** The benchmark's distinct n-gram hash set (the broadcast side). */
   private def benchHashes(bench: DataFrame, textCol: String,
       n: Int): DataFrame = {
-    GraftFunctions.register(bench.sparkSession)
     bench.select(explode(Dedup.shingleHashSet(col(textCol), n)).as("h"))
       .distinct()
   }

@@ -77,7 +77,6 @@ object Dedup {
       rowsPerBand: Int = 4,
       shingleSize: Int = 3,
       maxBucket: Int = 10000): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val numHashes = bands * rowsPerBand
     // staged: feeds banding once + both sides of the verify join.
     // (r21 note: spreading this scan to core count was measured and
@@ -156,7 +155,6 @@ object Dedup {
   def exactJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3,
       maxBucket: Int = 100000): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val docs = stage(df
       .select(col(idCol).as("id"),
         shingleHashSet(col(textCol), shingleSize).as("h"))
@@ -185,7 +183,6 @@ object Dedup {
     */
   def droppedShingles(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, maxBucket: Int = 100000): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val inv = df
       .select(col(idCol).as("id"),
         shingleHashSet(col(textCol), shingleSize).as("h"))
@@ -255,7 +252,6 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3,
       maxBucket: Int = 10000): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // staged: two longs per doc; the tokenize+hash scan behind the
     // fingerprint runs once instead of once per downstream use
     val hashed = stage(df.select(col(idCol).as("id"), simHash(col(textCol)).as("sim")))
@@ -274,7 +270,6 @@ object Dedup {
     */
   def hammingNearDup(hashed: DataFrame, maxHamming: Int,
       maxBucket: Int = 10000): DataFrame = {
-    GraftFunctions.register(hashed.sparkSession)
     val nBlocks = maxHamming + 1
     val width = (64 + nBlocks - 1) / nBlocks
     val mask = if (width >= 64) -1L else (1L << width) - 1L
@@ -455,7 +450,7 @@ object Dedup {
     // Long ids (every production caller — doc_id/vec_id are BIGINT) take
     // the RDD loop: a Catalyst action on a tiny leaf-based round plan
     // still costs ~0.17-0.3 s of fixed planning/AQE/codegen latency per
-    // action (measured, DebugLoopOverhead), and the loop runs 2 actions
+    // action (measured, OPTIMIZATION_r21.md), and the loop runs 2 actions
     // per round; RDD stages schedule in ~10 ms. Identical semantics
     // (same seed, same propagate+jump rounds, same witness, same strict
     // contract) — the DataFrame path below remains for string/decimal
@@ -977,7 +972,6 @@ object Dedup {
       rowsPerBand: Int = 4, shingleSize: Int = 3,
       nBuckets: Int = 32): Unit = {
     val spark = df.sparkSession
-    GraftFunctions.register(spark)
     val docs = df
       .select(col(idCol).as("id"), shingleHashSet(col(textCol), shingleSize).as("h"))
       .where(size(col("h")) > 0)
@@ -1096,7 +1090,6 @@ object Dedup {
       bands: Int = 32, rowsPerBand: Int = 4, shingleSize: Int = 3,
       maxBucket: Int = 10000): DataFrame = {
     val spark = newDocs.sparkSession
-    GraftFunctions.register(spark)
     val newShingles = stage(newDocs
       .select(col(idCol).as("id"), shingleHashSet(col(textCol), shingleSize).as("h"))
       .where(size(col("h")) > 0))
@@ -1190,7 +1183,6 @@ object Dedup {
       textCol: String, bands: Int = 32, rowsPerBand: Int = 4,
       shingleSize: Int = 3): Unit = {
     val spark = newDocs.sparkSession
-    GraftFunctions.register(spark)
     // ONE lock spans all three face appends (shingles, bands, stats):
     // a per-table lock would still let two appenders interleave ACROSS
     // the faces and tear the shingle/band correspondence
@@ -1242,7 +1234,6 @@ object Dedup {
       blockCol: String,
       n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // staged: feeds the prefix explode + both sides of the verify join
     val docs = stage(df.select(col(idCol).as("id"), col(blockCol).as("block"),
       shingleHashSet(col(textCol), n).as("h"))
@@ -1297,7 +1288,6 @@ object Dedup {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
     require(n > 0, s"shingle size must be positive, got $n")
-    GraftFunctions.register(df.sparkSession)
     val docs = stage(containmentSets(df, idCol, textCol,
       Some(blockCol), n))
     containmentPairs(docs, docs, threshold, roundTo)
@@ -1310,7 +1300,6 @@ object Dedup {
     */
   private[graft] def containmentSets(df: DataFrame, idCol: String,
       textCol: String, blockCol: Option[String], n: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
         blockCol.map(col).getOrElse(lit(0)).as("block"),
         shingleHashSet(col(textCol), n).as("h"))

@@ -234,7 +234,6 @@ object EmbedStats {
     */
   def pcaProject(df: DataFrame, idCol: String, vecCol: String, p: Pca,
       roundTo: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val offs = p.offsets
     val cols = p.components.zipWithIndex.map { case (c, j) =>
       round(graft.functions.GraftFunctions.dotProduct(
@@ -264,7 +263,6 @@ object EmbedStats {
     */
   def pcaWhiten(df: DataFrame, idCol: String, vecCol: String, p: Pca,
       roundTo: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val offs = p.offsets
     val floor = math.max(1e-12,
       (if (p.eigenvalues.isEmpty) 0.0 else p.eigenvalues.max) * 1e-6)
@@ -290,7 +288,6 @@ object EmbedStats {
     */
   def pcaProjectVec(df: DataFrame, idCol: String, vecCol: String, p: Pca,
       whiten: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val offs = p.offsets
     val floor = math.max(1e-12,
       (if (p.eigenvalues.isEmpty) 0.0 else p.eigenvalues.max) * 1e-6)

@@ -793,7 +793,6 @@ object Ivf {
   def topKInt8(spark: SparkSession, path: String, query: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 4,
       roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(spark)
     val centroids = readIndex(spark, path).centroids
     val probes = probeCells(centroids, queryVecOf(query, vecCol), nprobe)
     val q = broadcast(query
@@ -829,7 +828,6 @@ object Ivf {
     */
   def cellResidualProfile(spark: SparkSession, path: String,
       vecCol: String, roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(spark)
     val centroids = readIndex(spark, path).centroids
     val res = GraftFunctions.centroidResidual(
       col(vecCol).cast("array<double>"), col("cluster").cast("int"),
@@ -990,8 +988,6 @@ object Ivf {
     */
   def topK(index: Index, query: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    val spark = query.sparkSession
-    GraftFunctions.register(spark)
     val probes = probeCells(index.centroids, queryVecOf(query, vecCol), nprobe)
     val q = broadcast(query.select(col(vecCol).as("query_vec")))
     index.assigned
@@ -1076,7 +1072,6 @@ object Ivf {
   def topKBatch(index: Index, queries: DataFrame, qidCol: String,
       vecCol: String, idCol: String, k: Int, nprobe: Int = 4,
       roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     val (qdf, allCells, qidOut) =
       batchProbe(index, queries, qidCol, vecCol, idCol, nprobe)
     rankTopK(
@@ -1102,7 +1097,6 @@ object Ivf {
       qidCol: String, vecCol: String, idCol: String, k: Int,
       nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
     val spark = queries.sparkSession
-    GraftFunctions.register(spark)
     val (qdf, allCells, qidOut) =
       batchProbe(index, queries, qidCol, vecCol, idCol, nprobe)
     rankTopK(

@@ -144,7 +144,6 @@ object Pq {
       seed: Long = 42L, fitSampleRate: Double = 1.0): Model = {
     require(m > 0 && ksub > 1 && ksub <= 256,
       s"need m > 0 and 1 < ksub <= 256 (byte codes), got m=$m ksub=$ksub")
-    GraftFunctions.register(assigned.sparkSession)
     val d = centroids(0).length
     require(d % m == 0, s"vector dim $d not divisible by m=$m")
     val dsub = d / m
@@ -202,7 +201,6 @@ object Pq {
     */
   def encodeRows(assigned: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], model: Model): DataFrame = {
-    GraftFunctions.register(assigned.sparkSession)
     val v = col(vecCol).cast("array<double>")
     assigned
       .select(col(idCol), v.as("__v"), col("cluster").cast("int").as("cluster"))
@@ -226,7 +224,6 @@ object Pq {
   def pqAssign(spark: SparkSession, path: String, idCol: String,
       vecCol: String, m: Int = 4, ksub: Int = 16, seed: Long = 42L,
       fitSampleRate: Double = 1.0): Unit = {
-    GraftFunctions.register(spark)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the marker carries EVERY parameter the stored face depends on —
@@ -274,7 +271,6 @@ object Pq {
   def topKPq(spark: SparkSession, path: String, query: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 4,
       roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(spark)
     val centroids = Ivf.readIndex(spark, path).centroids
     val qvec = Ivf.queryVecOf(query, vecCol)
     val probes = Ivf.probeCells(centroids, qvec, nprobe)
@@ -331,7 +327,6 @@ object Pq {
       idCol: String, vecCol: String, k: Int, kCand: Int, nprobe: Int = 4,
       roundTo: Int = 6): DataFrame = {
     require(kCand >= k, s"stage-1 candidate count $kCand must cover k=$k")
-    GraftFunctions.register(spark)
     val centroids = Ivf.readIndex(spark, path).centroids
     val qvec = Ivf.queryVecOf(query, vecCol)
     val probes = Ivf.probeCells(centroids, qvec, nprobe)
@@ -385,7 +380,6 @@ object Pq {
       queries: DataFrame, qidCol: String, vecCol: String, idCol: String,
       kCand: Int, nprobe: Int = 4, roundTo: Int = 6)
       : (DataFrame, String) = {
-    GraftFunctions.register(spark)
     val (qdf, allCells, qidOut) =
       Ivf.batchProbe(index, queries, qidCol, vecCol, idCol, nprobe)
     // adc_rank re-derives topKPqBatch's own ranking order (rounded ADC
@@ -435,7 +429,6 @@ object Pq {
   def topKPqBatch(spark: SparkSession, path: String, index: Ivf.Index,
       queries: DataFrame, qidCol: String, vecCol: String, idCol: String,
       k: Int, nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(spark)
     val (qdf, allCells, qidOut) =
       Ivf.batchProbe(index, queries, qidCol, vecCol, idCol, nprobe)
     topKPqBatchWith(spark, path, index, qdf, allCells, qidOut, idCol,
@@ -526,7 +519,6 @@ object Pq {
       idCol: String, kCandMax: Int, nprobes: Seq[Int], roundTo: Int = 6)
       : (DataFrame, String) = {
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1), "nprobes must be >= 1")
-    GraftFunctions.register(spark)
     val (qdf, allCells, qidOut) =
       Ivf.batchProbe(index, queries, qidCol, vecCol, idCol, nprobes.max)
     val scored = Staged(pqScoredBatch(spark, path, index, qdf, allCells,

@@ -39,7 +39,6 @@ object Similarity {
       vecCol: String,
       k: Int,
       roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(query.select(col(vecCol).as("query_vec")))
     // zero-norm corpus vectors have no cosine (0/0 = NaN, and Spark
     // orders NaN above every number — the top-k would lead with NaN rows)
@@ -65,7 +64,6 @@ object Similarity {
   def bruteForceTopKBatch(corpus: DataFrame, queries: DataFrame,
       qidCol: String, vecCol: String, idCol: String, k: Int,
       roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val qidOut = if (qidCol == idCol) "query_id" else qidCol
     val q = broadcast(queries.select(col(qidCol).as(qidOut),
       col(vecCol).as("query_vec")))
@@ -89,7 +87,6 @@ object Similarity {
       blockCol: String,
       threshold: Double,
       roundTo: Int = 6): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // norms computed once per row, not once per pair. The self-join is
     // repartitioned at explicit width: its cost is quadratic CPU per
     // block (dot products), which AQE's byte-based coalescing would
@@ -224,7 +221,6 @@ object Similarity {
       dim: Int = -1,
       seed: Long = 42L,
       maxBucket: Int = 10000): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val planes = hyperplanes(nBits, resolveDim(df, vecCol, dim), seed)
     // zero vectors have no cosine (0/0 = NaN, and Spark orders NaN above
     // every number, so it would pass the threshold) — exclude them
@@ -357,7 +353,6 @@ object Similarity {
       nBits: Int = 8,
       dim: Int = -1,
       seed: Long = 42L): (DataFrame, DataFrame) = {
-    GraftFunctions.register(corpus.sparkSession)
     val planes = hyperplanes(nBits, resolveDim(corpus, vecCol, dim), seed)
     // zero-norm vectors excluded for the same NaN reason as bruteForceTopK
     val bucketed = corpus.where(l2Norm(col(vecCol)) > 0)

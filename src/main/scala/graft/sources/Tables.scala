@@ -17,13 +17,6 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // idempotent native-function registration: Column-level helpers
-    // (Dedup.shingleHashSet & co.) have no session to register against,
-    // so a query run ALONE in a fresh session would hit
-    // UNRESOLVED_ROUTINE for ngram_hashes/minhash_sig/… — registering
-    // at the table loader (every query's entry point) closes that hole
-    // without relying on suite ordering (x22 standalone exposed it)
-    graft.functions.GraftFunctions.register(spark)
     // events.ts has drifted across fixture generations: parquet
     // TIMESTAMP(NANOS) (read as long, truncated to µs — exactly DuckDB's
     // ns→µs cast) and µs-precision TIMESTAMP_NTZ (cast to TimestampType;

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.ops.{Dedup, Staged, TextAnalysis}
 import graft.sources.Tables
 
@@ -65,13 +66,7 @@ object ScaleRehearsalStream {
       args.lift(2).map(_.toInt).getOrElse(4))
     val epochCounts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 8, 16)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scale-stream")
     import spark.implicits._
 
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
@@ -163,14 +158,7 @@ object ScaleRehearsalStream {
     */
   private def runQuotation(epochCounts: Seq[Int]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-quote")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-quote")
     import spark.implicits._
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = base.count()
@@ -253,14 +241,7 @@ object ScaleRehearsalStream {
     */
   private def runNovelty(epochCounts: Seq[Int]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-novelty")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-novelty")
     import spark.implicits._
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = base.count()
@@ -345,14 +326,7 @@ object ScaleRehearsalStream {
     */
   private def runHealth(epochCounts: Seq[Int]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-health")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-health")
     import spark.implicits._
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = base.count()
@@ -456,14 +430,7 @@ object ScaleRehearsalStream {
     */
   private def runMaintain(nEpochs: Int, debounce: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-maintain")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-maintain")
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings").select($"vec_id", $"embedding")
     val nBase = emb.count()
@@ -594,12 +561,8 @@ object ScaleRehearsalStream {
     */
   private def runLadder(nDays: Int, maxChain: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-ladder")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+    val spark: SparkSession = GraftSession.builder("graft-scale-ladder")
+      .master(s"local[${GraftSession.cpus}]")
       // one JVM hosts 2·nDays day-jobs back to back (production runs
       // one driver per day): without a bound the SQL status store
       // retains 1000 executions' plan metrics/descriptions (~1M
@@ -685,14 +648,7 @@ object ScaleRehearsalStream {
     */
   private def runSpanBytes(window: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-span-bytes")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-span-bytes")
     import spark.implicits._
     val docs = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val corpus = docs.where($"doc_id" % 10 =!= 0)
@@ -764,14 +720,7 @@ object ScaleRehearsalStream {
   private def runMaintainBpe(nEpochs: Int, debounce: Int,
       nMerges: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-maintain-bpe")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-maintain-bpe")
     import spark.implicits._
     val docsAll = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = docsAll.count()
@@ -932,14 +881,7 @@ object ScaleRehearsalStream {
     */
   private def runQuotationLive(nEpochs: Int, maxChain: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-qlive")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-qlive")
     import spark.implicits._
 
     val docsAll = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
@@ -1012,14 +954,7 @@ object ScaleRehearsalStream {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // explicit type: the implicit SQLContext below otherwise drags this
     // definition into its own inference cycle via spark.implicits._
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-stream-live")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-stream-live")
     import spark.implicits._
 
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
@@ -1066,14 +1001,7 @@ object ScaleRehearsalStream {
     */
   private def runHeavyHitters(nEpochs: Int, k: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .appName("graft-scale-stream-hh")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local("graft-scale-stream-hh")
     import spark.implicits._
 
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")

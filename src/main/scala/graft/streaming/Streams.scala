@@ -224,7 +224,6 @@ object Streams {
     */
   def dedupeNearStream(df: DataFrame, textCol: String,
       tsCol: String = "ts", watermark: String = "1 hour"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("__fp", graft.ops.Dedup.simHash(col(textCol)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__fp")
@@ -1619,12 +1618,21 @@ object Streams {
       case parts => parts.reduce(_.unionByName(_))
     }
 
+  /** Loads every micro-batch of `df` into `sink`. Empty micro-batches
+    * are skipped: a watermarked stateful query runs a no-data batch to
+    * evict state, and a keyed upsert sink would rewrite its whole
+    * collection for it. The batch is held across the check and the
+    * write (as `ConnectorRunner.run` does), so the check does not
+    * re-run the batch's plan.
+    */
   def sinkStream(df: DataFrame, sink: GraftSink, checkpoint: String): StreamingQuery =
     df.writeStream
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink.write(batch): Unit
+        batch.persist()
+        try { if (!batch.isEmpty) sink.write(batch): Unit }
+        finally batch.unpersist(): Unit
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -98,7 +98,6 @@ object VectorStreams {
       threshold: Double, maxChain: Int = 16,
       probes: Int = 1): Unit = Staged.scoped {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val base = Ivf.readIndex(spark, basePath)
     val batchVecs = batch.select(col(idCol), col(vecCol))
     // pair-finding frame: one row per (vector, probed cell)

@@ -11,15 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchHistorySpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.1"
+  private val cores = 4
 
-  private def full(entries: String, sfDir: String = sf): String =
-    s"""{"metric":"total","value":1.0,"unit":"sec","queries":{$entries},"sf":"$sfDir"}"""
+  private def full(entries: String, sfDir: String = sf,
+      histCores: Option[Int] = Some(cores)): String = {
+    val coresF = histCores.map(c => s""","cores":$c""").getOrElse("")
+    s"""{"metric":"total","value":1.0,"unit":"sec","queries":{$entries},"sf":"$sfDir"$coresF}"""
+  }
 
   test("parseHistory reads med and best per query") {
     val txt = full(
       """"q01_a":{"min":0.10,"med":0.12,"max":0.30,"load":1.5,"best":0.08},""" +
         """"x20_b":{"min":2.95,"med":4.03,"max":4.97,"load":4.97}""")
-    val h = Bench.parseHistory(txt, sf)
+    val h = Bench.parseHistory(txt, sf, cores)
     assert(h("q01_a") === Bench.Hist(Some(0.12), Some(0.08)))
     assert(h("x20_b") === Bench.Hist(Some(4.03), None))
   }
@@ -27,17 +31,29 @@ class BenchHistorySpec extends AnyFunSuite {
   test("history from a different sf degrades to empty") {
     val txt = full(""""q01_a":{"min":0.1,"med":0.2,"max":0.3,"load":1.0}""",
       sfDir = "/root/testdata/sf0.01")
-    assert(Bench.parseHistory(txt, sf).isEmpty)
+    assert(Bench.parseHistory(txt, sf, cores).isEmpty)
+  }
+
+  test("history from a different core count degrades to empty") {
+    val txt = full(""""q01_a":{"min":0.1,"med":0.2,"max":0.3,"load":1.0,"best":0.1}""",
+      histCores = Some(32))
+    assert(Bench.parseHistory(txt, sf, cores).isEmpty)
+  }
+
+  test("history that does not record its cores degrades to empty") {
+    val txt = full(""""q01_a":{"min":0.1,"med":0.2,"max":0.3,"load":1.0,"best":0.1}""",
+      histCores = None)
+    assert(Bench.parseHistory(txt, sf, cores).isEmpty)
   }
 
   test("garbage input degrades to empty, never throws") {
-    assert(Bench.parseHistory("not json at all", sf).isEmpty)
-    assert(Bench.parseHistory("", sf).isEmpty)
+    assert(Bench.parseHistory("not json at all", sf, cores).isEmpty)
+    assert(Bench.parseHistory("", sf, cores).isEmpty)
   }
 
   test("an error entry still contributes its carried-forward best") {
     val txt = full(""""q09_c":{"load":2.0,"best":0.4,"err":"boom {brace}"}""")
-    assert(Bench.parseHistory(txt, sf)("q09_c") === Bench.Hist(None, Some(0.4)))
+    assert(Bench.parseHistory(txt, sf, cores)("q09_c") === Bench.Hist(None, Some(0.4)))
   }
 
   test("rerun fires on 2x the previous sweep's median (the original gate)") {
@@ -72,7 +88,7 @@ class BenchHistorySpec extends AnyFunSuite {
     val txt = full(
       """"q01":{"name":"q01_pricing_summary","min":0.10,"med":0.12,"max":0.30,"load":1.5,"best":0.08},""" +
         """"x20":{"name":"x20_dedup_clusters","load":2.0,"best":0.4,"err":"boom"}""")
-    val h = Bench.parseHistory(txt, sf)
+    val h = Bench.parseHistory(txt, sf, cores)
     assert(h("q01") === Bench.Hist(Some(0.12), Some(0.08)))
     assert(h("x20") === Bench.Hist(None, Some(0.4)))
   }

@@ -13,17 +13,10 @@ import org.apache.spark.sql.functions._
   */
 class ExpressionsCodegenSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]").appName("codegen-strict")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
+  private lazy val spark: SparkSession =
+    graft.GraftSession.builder("codegen-strict").master("local[2]")
       .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
 
   test("all native expressions compile and evaluate inside codegen") {
     import spark.implicits._

@@ -215,17 +215,10 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("SQL extension functions resolve via GraftExtensions") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    try {
-      val r = s2.sql(
-        "SELECT jaccard_sorted(array(1L,2L,3L), array(2L,3L,4L)) AS j," +
-        " simhash64(array(7L)) AS s").head()
-      assert(r.getDouble(0) == 0.5)
-      assert(r.getLong(1) == 7L)
-    } finally () // shared-JVM session: leave teardown to the suite
+    val r = spark.sql(
+      "SELECT jaccard_sorted(array(1L,2L,3L), array(2L,3L,4L)) AS j," +
+      " simhash64(array(7L)) AS s").head()
+    assert(r.getDouble(0) == 0.5)
+    assert(r.getLong(1) == 7L)
   }
 }

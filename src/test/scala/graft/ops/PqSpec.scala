@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 class PqSpec extends SparkSpec {
   import spark.implicits._
-  GraftFunctions.register(spark)
 
   // planted 2-subspace model over 4-dim vectors: codebooks chosen so
   // every argmin is hand-checkable, including an exact tie

@@ -158,6 +158,38 @@ class StreamsSpec extends SparkSpec {
     assert(back.select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("sinkStream never hands an empty micro-batch to the sink") {
+    // a watermarked Update-mode aggregation: once a batch moves the
+    // watermark, the engine runs a no-data micro-batch to evict state,
+    // and in Update mode that batch emits no rows
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-empty")
+    val writes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val upsert = graft.load.UpsertParquetSink(dir.toString + "/coll", Seq("w", "user_id"))
+    val sink = new graft.load.GraftSink {
+      def write(df: org.apache.spark.sql.DataFrame): Long = {
+        val n = upsert.write(df); writes += n; n
+      }
+    }
+    val input = MemoryStream[EventRow](spark)
+    input.addData(
+      EventRow(1, ts(1), 1, "click", 1.0),
+      EventRow(2, ts(2), 2, "view", 2.0),
+      EventRow(3, ts(9), 1, "click", 3.0))
+    val agg = input.toDF()
+      .withWatermark("ts", "1 minute")
+      .groupBy(window($"ts", "5 minutes").getField("start").as("w"), $"user_id")
+      .agg(sum($"value").as("total"))
+    val q = Streams.sinkStream(agg, sink, dir.toString + "/ckpt")
+    q.awaitTermination()
+    val batches = q.recentProgress.map(_.numInputRows).toSeq
+    assert(batches.count(_ > 0) == 1 && batches.contains(0L),
+      s"precondition: one data batch and a no-data batch, got input rows $batches")
+    assert(writes.toSeq == Seq(3L), s"sink writes (collection rows after each): $writes")
+    val back = spark.read.parquet(dir.toString + "/coll")
+      .select($"user_id", $"total").as[(Long, Double)].collect().sorted.toSeq
+    assert(back == Seq((1L, 1.0), (1L, 3.0), (2L, 2.0)))
+  }
+
   test("streaming as-of over the real fixture equals the batch tolerance as-of") {
     import org.apache.spark.sql.types._
     // declare the file's own (drift-prone) schema, canonicalize like batch
