@@ -68,9 +68,7 @@ object Bench {
     * counts only jiffies the hypervisor gave to OTHER tenants, exactly
     * the contamination the gate exists to catch (observed clean sweeps:
     * ≤ 0.6%%; contaminated sessions: 1.9-8.7%%). Loadavg is still
-    * recorded per entry as evidence, and an explicit
-    * SPARK_GRAFT_BENCH_LOADGATE re-enables the legacy load gate on top
-    * for deployments where same-VM co-tenants exist.
+    * recorded per entry as evidence.
     */
   def hotMeasurement(steal: Double, gate: Double): Boolean =
     gate > 0 && steal > gate
@@ -83,14 +81,11 @@ object Bench {
   def defaultStealGate: Double = 1.5
 
   /** The reported number for an entry: normally best of (sweep min,
-    * end-of-sweep rerun). When BOTH measurements happened on a hot box
-    * (load above the gate) they are noise by construction — no
-    * averaging ritual recovers a clean number — so report the
-    * ratcheting cross-sweep best instead, flagged `hot`, and let the
-    * flag (not a contaminated 2x number) carry the "this sweep ran
-    * dirty" signal. A hot NEW query (no ratchet yet) keeps its
-    * measured min, still flagged; and if the contaminated measurement
-    * somehow beats the ratchet, the smaller number wins as always.
+    * end-of-sweep rerun). When no clean measurement exists (both were
+    * taken above the steal gate, or the sweep was hot and no rerun
+    * completed) the measured min is reported, flagged `hot`: the flag
+    * carries the "this entry ran dirty" signal, and a historical best
+    * is never reported in place of what was measured.
     *
     * Hot sweep + CLEAN rerun (the r13 q45 edge): the rerun is the only
     * clean measurement, so it is reported ALONE — a hot sweep min that
@@ -101,25 +96,18 @@ object Bench {
     * alone for the same reason — a hot measurement never enters a
     * clean report from either side.
     */
-  def reported(sweepMin: Double, sweepLoad: Double,
-      rerun: Option[(Double, Double)], histBest: Option[Double],
-      gate: Double): (Double, Boolean) = rerun match {
-    case Some((rt, rl)) =>
-      val sweepHot = hotMeasurement(sweepLoad, gate)
-      val rerunHot = hotMeasurement(rl, gate)
-      if (sweepHot && rerunHot) {
-        val measured = math.min(sweepMin, rt)
-        (histBest.filter(_ < measured).getOrElse(measured), true)
-      } else if (sweepHot) (rt, false)
-      else if (rerunHot) (sweepMin, false)
-      else (math.min(sweepMin, rt), false)
-    // a hot sweep whose rerun never completed has no clean measurement
-    // either — ratchet best + flag, same as both-hot
-    case None =>
-      if (hotMeasurement(sweepLoad, gate))
-        (histBest.filter(_ < sweepMin).getOrElse(sweepMin), true)
-      else (sweepMin, false)
-  }
+  def reported(sweepMin: Double, sweepSteal: Double,
+      rerun: Option[(Double, Double)], gate: Double): (Double, Boolean) =
+    rerun match {
+      case Some((rt, rs)) =>
+        val sweepHot = hotMeasurement(sweepSteal, gate)
+        val rerunHot = hotMeasurement(rs, gate)
+        if (sweepHot && rerunHot) (math.min(sweepMin, rt), true)
+        else if (sweepHot) (rt, false)
+        else if (rerunHot) (sweepMin, false)
+        else (math.min(sweepMin, rt), false)
+      case None => (sweepMin, hotMeasurement(sweepSteal, gate))
+    }
 
   /** Fold this sweep's reportable best into the historical cross-sweep
     * best: the ratchet never rises, and an absent history starts at
@@ -196,15 +184,10 @@ object Bench {
     // hypervisor is visibly stealing cycles — bounded by a GLOBAL wait
     // budget so a persistently-contended box degrades to the old
     // behavior (measure anyway, flag via the recorded steal + rerun)
-    // instead of stalling the sweep. The legacy loadavg gate stays
-    // available via SPARK_GRAFT_BENCH_LOADGATE (off by default: on this
-    // single-tenant VM loadavg is the bench's own parallelism).
+    // instead of stalling the sweep.
     val gate = sys.env.get("SPARK_GRAFT_BENCH_STEALGATE")
       .flatMap(v => scala.util.Try(v.toDouble).toOption)
       .getOrElse(defaultStealGate)
-    val loadGate = sys.env.get("SPARK_GRAFT_BENCH_LOADGATE")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption)
-      .getOrElse(0.0)
     // instantaneous steal%% over a short window, for the pre-query wait
     def stealNow(): Double = {
       val (s0, j0) = cpuJiffies()
@@ -219,8 +202,7 @@ object Bench {
     var waitBudgetMs = sys.env.get("SPARK_GRAFT_BENCH_WAITMS")
       .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(300000L)
     def waitForQuiet(): Unit =
-      while ((hotMeasurement(stealNow(), gate) ||
-          (loadGate > 0 && loadAvg() > loadGate)) && waitBudgetMs > 0) {
+      while (hotMeasurement(stealNow(), gate) && waitBudgetMs > 0) {
         Thread.sleep(1500); waitBudgetMs -= 2000
       }
     // history from the previous sweep's BENCH_FULL.json (median +
@@ -276,15 +258,10 @@ object Bench {
             (jiffiesAfter - jiffiesBefore))
             .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
         else 0.0
-      // the entry's HOT signal: its own steal window, plus the legacy
-      // loadavg gate when explicitly enabled
-      val hotSignal =
-        if (loadGate > 0 && load > loadGate) math.max(gate + 1.0, steals(name))
-        else steals(name)
       // unpersist this query's staged intermediates before the next query
       // runs, so the 80-query sweep doesn't accumulate block-manager state
       graft.ops.Staged.releaseAll()
-      name -> (times.sorted, load, hotSignal, err)
+      name -> (times.sorted, load, steals(name), err)
     }
     // Self-defense pass: a query whose best-of-N still exceeds 2x its
     // previous-sweep median hit either a real regression or a box-state
@@ -311,14 +288,11 @@ object Bench {
           val ok = try { run1(fn); true } catch { case _: Throwable => false }
           val t = (System.nanoTime() - t0) / 1e9
           // the rerun's own steal window decides whether the entry
-          // stayed hot: both-hot entries report the ratchet best, not
-          // contaminated time
+          // stayed hot
           val (s1, j1) = cpuJiffies()
           val rs = if (j1 > j0) 100.0 * (s1 - s0) / (j1 - j0) else 0.0
-          val rHot = if (loadGate > 0 && loadAvg() > loadGate)
-            math.max(gate + 1.0, rs) else rs
           graft.ops.Staged.releaseAll()
-          if (ok) Some((t, rHot)) else None
+          if (ok) Some((t, rs)) else None
         }
         val first = onePass()
         // r17: one more attempt when the first rerun is itself suspect
@@ -345,13 +319,12 @@ object Bench {
     // keys (full name carried in a "name" field) so the two artifacts
     // cross-reference without a decoder ring.
     def fmt(v: Double): String = f"$v%.4f"
-    // the reported number is best of (sweep runs ++ self-defense rerun)
-    // — unless BOTH were hot, in which case the ratchet best is reported
-    // with a "hot" flag (see `reported`): a cleared box-state outlier
-    // stops poisoning the headline, a real regression reproduces in the
-    // rerun and stays
+    // the reported number is best of (sweep runs ++ self-defense rerun),
+    // flagged "hot" when no clean measurement exists (see `reported`): a
+    // cleared box-state outlier stops poisoning the headline, a real
+    // regression reproduces in the rerun and stays
     def best(k: String, ts: Seq[Double], hotSig: Double): (Double, Boolean) =
-      reported(ts.head, hotSig, reruns.get(k), histOf(k).flatMap(_.best), gate)
+      reported(ts.head, hotSig, reruns.get(k), gate)
     // an entry with zero successful runs is an ERROR: it gets no timing
     // in "queries", is excluded from the total, and is named loudly in a
     // top-level "errors" list
@@ -380,18 +353,15 @@ object Bench {
       val rerun = reruns.get(k).map { case (rt, rs) =>
         s""","rerun":$rt,"rerun_steal":$rs""" }.getOrElse("")
       val errF = err.map(m => s""","err":${jstr(m)}""").getOrElse("")
-      // "hot": both the sweep and the rerun were measured above the
-      // steal gate — the entry's reported number is the ratchet best,
-      // and the min/med/max columns are box noise, recorded as evidence
+      // "hot": no clean measurement exists — the reported number is the
+      // measured min, and the min/med/max columns are box noise,
+      // recorded as evidence
       val hotF = if (ts.nonEmpty && best(k, ts, hotSig)._2) ""","hot":true""" else ""
       // "best" is the ratcheting cross-sweep minimum at this sf: this
       // sweep's reportable best folded into the history's best. An
       // error entry carries the history's best forward unchanged so a
-      // one-round breakage doesn't erase the regression floor. A
-      // both-hot entry's reported value IS the history best (or its
-      // contaminated min for a new query) — folding it is a no-op or
-      // records the only floor the entry has; the ratchet can only be
-      // LOWERED by a later clean sweep.
+      // one-round breakage doesn't erase the regression floor; the
+      // ratchet can only be LOWERED by a later sweep.
       val hb = ratchet(histOf(k).flatMap(_.best),
         if (ts.isEmpty) None else Some(best(k, ts, hotSig)._1))
       val bestF = hb.map(b => s""","best":$b""").getOrElse("")

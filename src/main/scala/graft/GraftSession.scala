@@ -33,9 +33,12 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for mains/tests; master defaults to all local cores. */
-  def local(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).master(s"local[$cpus]").getOrCreate()
+  /** Local session for mains/tests on all [[cpus]]; `conf` adds settings
+    * that must be fixed when the session is built.
+    */
+  def local(appName: String = "graft",
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val s = builder(appName).master(s"local[$cpus]").config(conf).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Staged}
+import graft.ops.Dedup
 import graft.sources.Tables
 
 /** Scale rehearsal for the dedup family (VERDICT r2 item 7): replicate
@@ -34,73 +34,55 @@ object ScaleRehearsal {
          else translate(col("text"), alpha, rotated(r))).as("text"))
     }.reduce(_ unionByName _)
 
-  def main(args: Array[String]): Unit = {
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale")
+  /** The K× replicated corpus, materialized to parquet once per (sf, K)
+    * so scan cost is a real file read, not an in-memory union.
+    */
+  def scaledDocsPath(base: DataFrame, sfDir: String, k: Int): String =
+    Rehearsal.cached(s"graft-scale-docs-${k}x", sfDir) { p =>
+      scaledDocs(base, k).repartition(32).write.mode("overwrite").parquet(p)
+    }
 
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale") { spark =>
+    val sfDir = Rehearsal.sfDir
     val base = Tables(spark, sfDir, "documents").select("doc_id", "text")
-
-    multipliers.foreach { k =>
-      // materialize the scaled corpus to parquet so scan cost is a real
-      // file read, not an in-memory union
-      val path = s"/tmp/graft-scale-docs-${k}x"
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        scaledDocs(base, k).repartition(32).write.mode("overwrite").parquet(path)
-      }
-      val docs = spark.read.parquet(path)
+    Rehearsal.ints(args.toSeq, 1, 2, 5, 10).foreach { k =>
+      val docs = spark.read.parquet(scaledDocsPath(base, sfDir, k))
       val n = docs.count()
-
-      def time(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val rows = f
-        ((System.nanoTime() - t0) / 1e9, rows)
-      }
-
-      val (tPairs, nPairs) = time {
+      val (tPairs, nPairs) = Rehearsal.timed {
         Dedup.minHashLsh(docs, "doc_id", "text", threshold = 0.8).count()
       }
-      Staged.releaseAll()
-      val (tNgram, nNgram) = time {
+      val (tNgram, nNgram) = Rehearsal.timed {
         Dedup.ngramJaccardBlocked(
           docs.withColumn("block", lit(1)), "doc_id", "text", "block",
           n = 3, threshold = 0.8).count()
       }
-      Staged.releaseAll()
       // directional containment (x66): same lossless-prefix family as
       // the Jaccard join but asymmetric — contained-side prefixes ×
       // container-side full explode. The letter-permutation replicas
       // preserve containment structure exactly (pairs grow K×, never
       // K²), so a super-linear curve here means the full-side explode
       // or the verify joins stopped scaling.
-      val (tCont, nCont) = time {
+      val (tCont, nCont) = Rehearsal.timed {
         Dedup.ngramContainmentBlocked(
           docs.withColumn("block", lit(1)), "doc_id", "text", "block",
           n = 3, threshold = 0.6).count()
       }
-      Staged.releaseAll()
-      val (tCc, nCc) = time {
+      val (tCc, nCc) = Rehearsal.timed {
         val pairs = Dedup.minHashLsh(docs, "doc_id", "text", threshold = 0.8)
         Dedup.connectedComponents(pairs, maxIter = 40).count()
       }
-      Staged.releaseAll()
       // incremental-vs-full: dedup a 10% daily batch against the other
       // 90% — full re-dedup cost grows with the corpus, incremental
       // cost with the batch (+ one index equi-join)
       val batch = docs.where(col("doc_id") % 10 === 0)
       val corpus90 = docs.where(col("doc_id") % 10 =!= 0)
-      // marker versioned: v2 = bucketed+sorted index layout (a cached
-      // plain-parquet index would silently measure the old shape)
-      val idxPath = s"/tmp/graft-scale-lshidx-${k}x"
-      if (!new java.io.File(s"$idxPath/_OK_v2").exists()) {
-        Dedup.writeLshIndex(corpus90, "doc_id", "text", idxPath, threshold = 0.8)
-        new java.io.File(s"$idxPath/_OK_v2").createNewFile()
+      val idxPath = Rehearsal.cached(s"graft-scale-lshidx-${k}x", sfDir) { p =>
+        Dedup.writeLshIndex(corpus90, "doc_id", "text", p, threshold = 0.8)
       }
-      val (tIncr, nIncr) = time {
+      val (tIncr, nIncr) = Rehearsal.timed {
         Dedup.incrementalNearDup(batch, idxPath, "doc_id", "text",
           threshold = 0.8).count()
       }
-      Staged.releaseAll()
       // FIXED batch vs GROWING index — the incremental contract at
       // 100 TB: per-batch cost tracks the batch, not the corpus. With
       // the bucketed layout the index never crosses an Exchange; what
@@ -111,23 +93,18 @@ object ScaleRehearsal {
       // built-in correctness face.
       val fixedBatch = docs
         .where(col("doc_id") % 10 === 0 && col("doc_id") < 10000000L)
-      val (tFix, nFix) = time {
+      val (tFix, nFix) = Rehearsal.timed {
         Dedup.incrementalNearDup(fixedBatch, idxPath, "doc_id", "text",
           threshold = 0.8).count()
       }
-      Staged.releaseAll()
       // same fixed-batch face for the passage index (x33's layout)
-      val pIdxPath = s"/tmp/graft-scale-passidx-${k}x"
-      if (!new java.io.File(s"$pIdxPath/_OK_v2").exists()) {
-        Dedup.writePassageIndex(corpus90, "doc_id", "text", window = 8,
-          path = pIdxPath)
-        new java.io.File(s"$pIdxPath/_OK_v2").createNewFile()
+      val pIdxPath = Rehearsal.cached(s"graft-scale-passidx-${k}x", sfDir) { p =>
+        Dedup.writePassageIndex(corpus90, "doc_id", "text", window = 8, path = p)
       }
-      val (tPFix, nPFix) = time {
+      val (tPFix, nPFix) = Rehearsal.timed {
         Dedup.incrementalPassageDedup(fixedBatch, pIdxPath, "doc_id", "text",
           window = 8).count()
       }
-      Staged.releaseAll()
       println(s"""{"mult":$k,"docs":$n,"lsh_sec":$tPairs,"lsh_pairs":$nPairs,""" +
         s""""ngram_sec":$tNgram,"ngram_pairs":$nNgram,""" +
         s""""contain_sec":$tCont,"contain_pairs":$nCont,""" +
@@ -136,6 +113,5 @@ object ScaleRehearsal {
         s""""incr_fixed_sec":$tFix,"incr_fixed_pairs":$nFix,""" +
         s""""pass_fixed_sec":$tPFix,"pass_fixed_docs":$nPFix}""")
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Ivf, Similarity, Staged}
 import graft.sources.Tables
@@ -39,11 +39,9 @@ object ScaleRehearsalAnn {
       if ((h & 1L) == 1L) -1.0 else 1.0
     }
 
-  def scaledVecs(base: DataFrame, k: Int, dim: Int): DataFrame = {
-    // replica stride from the data, not a constant: a fixed 10M offset
-    // would collide replica ids on a ≥10M-row base and silently corrupt
-    // the pair-count curve this harness measures
-    val stride = base.agg(max(col("vec_id"))).head().getLong(0) + 1L
+  def scaledVecs(base: DataFrame, k: Int): DataFrame = {
+    val dim = base.select(size(col("embedding"))).head().getInt(0)
+    val stride = Rehearsal.stride(base, "vec_id")
     (0 until k).map { r =>
       val s = typedLit(signs(r, dim))
       base.select(
@@ -54,76 +52,65 @@ object ScaleRehearsalAnn {
     }.reduce(_ unionByName _)
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("refit")) { runRefitCurve(args.drop(1)); return }
-    if (args.headOption.contains("resize")) { runResizeCurve(args.drop(1)); return }
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10, 20)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-ann")
+  /** The K× replicas, materialized once per (sf, K); shared with
+    * [[ScaleRehearsalSem]].
+    */
+  def scaledVecsPath(base: DataFrame, sfDir: String, k: Int): String =
+    Rehearsal.cached(s"graft-scale-vecs-${k}x", sfDir) { p =>
+      scaledVecs(base, k).repartition(32).write.mode("overwrite").parquet(p)
+    }
 
-    val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val dim = base.select(size(col("embedding"))).head().getInt(0)
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale-ann") { spark =>
+    val base = Tables(spark, Rehearsal.sfDir, "embeddings")
+      .select("vec_id", "embedding")
+    val rest = args.toSeq.drop(1)
+    args.headOption match {
+      case Some("refit") => runRefitCurve(spark, base, Rehearsal.ints(rest, 1, 2, 5, 10))
+      case Some("resize") => runResizeCurve(spark, base, Rehearsal.ints(rest, 2, 4, 8))
+      case _ => runCurve(spark, base, Rehearsal.ints(args.toSeq, 1, 2, 5, 10, 20))
+    }
+  }
 
+  private def runCurve(spark: SparkSession, base: DataFrame,
+      multipliers: Seq[Int]): Unit =
     multipliers.foreach { k =>
-      // sfDir-fingerprinted cache (shared with ScaleRehearsalSem): a
-      // path without the corpus tag would silently reuse replicas built
-      // from a DIFFERENT sfDir — or from the pre-fix fixed-stride code
-      val path = s"/tmp/graft-scale-vecs-${graft.queries.OracleDump.sfTag(sfDir)}-${k}x"
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        scaledVecs(base, k, dim).repartition(32).write.mode("overwrite").parquet(path)
-      }
-      val vecs = spark.read.parquet(path)
+      val vecs = spark.read.parquet(scaledVecsPath(base, Rehearsal.sfDir, k))
       val n = vecs.count()
       val query = vecs.where(col("vec_id") === 0L)
 
-      def time(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val rows = f
-        ((System.nanoTime() - t0) / 1e9, rows)
-      }
-
       // sign-LSH build: signature + bucket every corpus row (the
       // shared prefix of both LSH operators)
-      val (tBucket, nBucket) = time {
+      val (tBucket, nBucket) = Rehearsal.timed {
         Similarity.lshNearDupBuckets(vecs, "vec_id", "embedding").count()
       }
-      Staged.releaseAll()
       // sign-LSH near-dup join (x15): bucket + Hamming-1 probe join +
       // exact cosine verify; true pairs grow K× by construction
-      val (tPairs, nPairs) = time {
+      val (tPairs, nPairs) = Rehearsal.timed {
         Similarity.lshNearDupPairs(vecs, "vec_id", "embedding", threshold = 0.3).count()
       }
-      Staged.releaseAll()
       // LSH top-k probe (x12): corpus-side bucketing dominates; the
       // probe set stays O(nBits) regardless of K
-      val (tTopk, nTopk) = time {
+      val (tTopk, nTopk) = Rehearsal.timed {
         Similarity.lshTopK(vecs, query, "vec_id", "embedding", k = 50).count()
       }
-      Staged.releaseAll()
       // corpus-wide kNN graph (x34): the near-dup candidate join read
       // directedly + per-source WindowGroupLimit top-k. nBits from the
       // occupancy policy — candidate volume ~n·(nBits+1)·occupancy,
       // linear in n where a fixed width would grow n²/2^nBits
       val knnBits = Similarity.nBitsForCorpus(n)
-      val (tKnn, nKnn) = time {
+      val (tKnn, nKnn) = Rehearsal.timed {
         Similarity.lshKnnGraph(vecs, "vec_id", "embedding",
           k = 5, nBits = knnBits).count()
       }
-      Staged.releaseAll()
       // IVF build (a04): KMeans fit + cluster-partitioned write —
       // forced fresh so the fit is measured, not the marker shortcut
       val idxPath = s"/tmp/graft-scale-ivf-${k}x"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete(): Unit
-      }
-      rmrf(new java.io.File(idxPath))
-      val (tBuild, _) = time {
+      Rehearsal.rmrf(idxPath)
+      val (tBuild, _) = Rehearsal.timed {
         Ivf.buildPersistent(vecs, idxPath, "vec_id", "embedding", k = 16)
-        16L
       }
       // IVF probe: fresh reload (no session cache) + nprobe-pruned scan
-      val (tProbe, nProbe) = time {
+      val (tProbe, nProbe) = Rehearsal.timed {
         Ivf.topK(Ivf.readIndex(spark, idxPath), query,
           "vec_id", "embedding", k = 50).count()
       }
@@ -132,10 +119,10 @@ object ScaleRehearsalAnn {
       // cut the face exists for (the probe itself also reads fewer
       // bytes per cell, but at this scale the fixed plan overhead
       // dominates the wall clock — bytes are the scale signal)
-      val (tQuant, _) = time {
-        Ivf.quantizeAssigned(spark, idxPath, "vec_id", "embedding"); 0L
+      val (tQuant, _) = Rehearsal.timed {
+        Ivf.quantizeAssigned(spark, idxPath, "vec_id", "embedding")
       }
-      val (tProbe8, nProbe8) = time {
+      val (tProbe8, nProbe8) = Rehearsal.timed {
         Ivf.topKInt8(spark, idxPath, query, "vec_id", "embedding", k = 50).count()
       }
       // PQ face (a10): m per-subspace KMeans fits + one row-local
@@ -143,11 +130,11 @@ object ScaleRehearsalAnn {
       // codebook-bound (m small fits), the encode is one corpus pass,
       // and the probe reads m bytes per vector — bytes_pq vs
       // bytes_float is the scan-bandwidth story the face exists for
-      val (tPqFit, _) = time {
+      val (tPqFit, _) = Rehearsal.timed {
         graft.ops.Pq.pqAssign(spark, idxPath, "vec_id", "embedding",
-          m = 4, ksub = 16); 0L
+          m = 4, ksub = 16)
       }
-      val (tProbePq, nProbePq) = time {
+      val (tProbePq, nProbePq) = Rehearsal.timed {
         graft.ops.Pq.topKPq(spark, idxPath, query,
           "vec_id", "embedding", k = 50).count()
       }
@@ -156,25 +143,22 @@ object ScaleRehearsalAnn {
       // candidate-bound (kCand rows), so staged_probe_sec must stay
       // flat in K like the other probes — the 100× claim the pruned
       // re-rank exists for
-      val (tStaged, nStaged) = time {
+      val (tStaged, nStaged) = Rehearsal.timed {
         graft.ops.Pq.topKStaged(spark, idxPath, query,
           "vec_id", "embedding", k = 10, kCand = 50).count()
       }
-      Staged.releaseAll()
       // embedding-statistics family (x61/x67): the d²/2 gram/cov
       // aggregation is the corpus-scan-bound member — its cost must be
       // linear in rows (key space is d²/2 regardless of corpus); the
       // PCA fit adds one d-key means pass + a driver-side Jacobi whose
       // cost is constant in corpus size, so pca_sec − gram_sec must
       // stay flat as K grows
-      val (tGram, nGram) = time {
+      val (tGram, nGram) = Rehearsal.timed {
         graft.ops.EmbedStats.gramCov(vecs, "embedding").count()
       }
-      Staged.releaseAll()
-      val (tPca, _) = time {
-        graft.ops.EmbedStats.pca(vecs, "embedding", k = 4).components.length.toLong
+      val (tPca, _) = Rehearsal.timed {
+        graft.ops.EmbedStats.pca(vecs, "embedding", k = 4)
       }
-      Staged.releaseAll()
       def faceBytes(sub: String): Long = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
@@ -196,8 +180,6 @@ object ScaleRehearsalAnn {
         s""""bytes_float":${faceBytes("assigned")},"bytes_int8":${faceBytes("assigned_int8")},""" +
         s""""bytes_pq":${faceBytes("assigned_pq")}}""")
     }
-    spark.stop()
-  }
 
   /** Refit-cost curve (round 16): the `Ivf.refitIndex` scale claim is
     * "refit cost ≈ build cost, linear in the corpus" — one KMeans fit,
@@ -214,28 +196,14 @@ object ScaleRehearsalAnn {
     * Usage: runMain graft.ScaleRehearsalAnn refit [multipliers...]
     * (default 1 2 5 10).
     */
-  private def runRefitCurve(args: Array[String]): Unit = {
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-ann")
-    val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val dim = base.select(size(col("embedding"))).head().getInt(0)
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+  private def runRefitCurve(spark: SparkSession, base: DataFrame,
+      multipliers: Seq[Int]): Unit =
     multipliers.foreach { k =>
-      val path = s"/tmp/graft-scale-vecs-${graft.queries.OracleDump.sfTag(sfDir)}-${k}x"
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        scaledVecs(base, k, dim).repartition(32).write.mode("overwrite").parquet(path)
-      val vecs = spark.read.parquet(path)
+      val vecs = spark.read.parquet(scaledVecsPath(base, Rehearsal.sfDir, k))
       val n = vecs.count()
       val idxPath = s"/tmp/graft-scale-refit-${k}x"
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-        f.delete(): Unit
-      }
-      rmrf(new java.io.File(idxPath))
-      val tBuild = time {
+      Rehearsal.rmrf(idxPath)
+      val (tBuild, _) = Rehearsal.timed {
         Ivf.buildPersistent(vecs, idxPath, "vec_id", "embedding", k = 16): Unit
         Ivf.quantizeAssigned(spark, idxPath, "vec_id", "embedding")
         graft.ops.Pq.pqAssign(spark, idxPath, "vec_id", "embedding",
@@ -243,20 +211,20 @@ object ScaleRehearsalAnn {
       }
       // the drift: 10% of the corpus re-ingested far from the fit
       // distribution, registered under frozen centroids
-      val stride = vecs.agg(max(col("vec_id"))).head().getLong(0) + 1L
+      val stride = Rehearsal.stride(vecs, "vec_id")
       val drift = vecs.where(col("vec_id") % 10 === 0)
         .select((col("vec_id") + lit(stride)).as("vec_id"),
           transform(col("embedding").cast("array<double>"), x => x + lit(30.0))
             .cast("array<float>").as("embedding"))
       val nDrift = drift.count()
-      val tAppend = time {
-        Ivf.appendToIndex(drift, idxPath, "vec_id", "embedding"): Unit
+      val (tAppend, _) = Rehearsal.timed {
+        Ivf.appendToIndex(drift, idxPath, "vec_id", "embedding")
       }
       def maxRes(): Double =
         Ivf.cellResidualProfile(spark, idxPath, "embedding")
           .agg(max(col("mean_res_norm"))).head().getDouble(0)
       val resDrifted = maxRes()
-      val tRefit = time {
+      val (tRefit, _) = Rehearsal.timed {
         Ivf.refitIndex(spark, idxPath, "vec_id", "embedding")
       }
       val resRefit = maxRes()
@@ -266,14 +234,11 @@ object ScaleRehearsalAnn {
         s"refit lost vectors at mult $k: $kept/$keptPq vs ${n + nDrift}")
       require(resDrifted >= 10 * resRefit,
         s"refit failed to repair at mult $k: $resDrifted -> $resRefit")
-      Staged.releaseAll()
       println(f"""{"mult":$k,"vecs":$n,"drift":$nDrift,""" +
         f""""build_faces_sec":$tBuild%.2f,"append_sec":$tAppend%.2f,""" +
         f""""res_drifted":$resDrifted%.3f,"res_refit":$resRefit%.3f,""" +
         f""""refit_sec":$tRefit%.2f}""")
     }
-    spark.stop()
-  }
 
   /** `resize`: the a19 policy loop end to end at growing corpus sizes.
     * Day-1 builds a three-face index sized for the BASE population
@@ -296,34 +261,19 @@ object ScaleRehearsalAnn {
     * it was observed flaky at mult=4 (0.53 vs 0.65 on 13 queries), the
     * exact absolute-threshold trap the IvfRefitSpec doctrine forbids.
     */
-  private def runResizeCurve(args: Array[String]): Unit = {
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(2, 4, 8)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-ann")
-    val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val dim = base.select(size(col("embedding"))).head().getInt(0)
+  private def runResizeCurve(spark: SparkSession, base: DataFrame,
+      multipliers: Seq[Int]): Unit = {
     val n0 = base.count()
-    val stride = base.agg(max(col("vec_id"))).head().getLong(0) + 1L
+    val stride = Rehearsal.stride(base, "vec_id")
     val k0 = Ivf.kForCells(n0, targetCell = 512, kMin = 4)
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-      f.delete(): Unit
-    }
     multipliers.foreach { m =>
-      val tag = graft.queries.OracleDump.sfTag(sfDir)
-      val corpusPath = s"/tmp/graft-scale-vecs-$tag-${m}x"
-      if (!new java.io.File(s"$corpusPath/_SUCCESS").exists())
-        scaledVecs(base, m, dim).repartition(32).write.mode("overwrite")
-          .parquet(corpusPath)
+      val corpusPath = scaledVecsPath(base, Rehearsal.sfDir, m)
       val vecs = spark.read.parquet(corpusPath)
       val n = vecs.count()
       val idxPath = s"/tmp/graft-scale-resize-${m}x"
-      rmrf(new java.io.File(idxPath))
+      Rehearsal.rmrf(idxPath)
       // day-1: index + faces sized for the base population only
-      val tBuild = time {
+      val (tBuild, _) = Rehearsal.timed {
         Ivf.buildPersistent(vecs.where(col("vec_id") < stride), idxPath,
           "vec_id", "embedding", k = k0): Unit
         Ivf.quantizeAssigned(spark, idxPath, "vec_id", "embedding")
@@ -331,14 +281,14 @@ object ScaleRehearsalAnn {
           m = 4, ksub = 16)
       }
       // growth: the other replicas register under the frozen k0 cells
-      val tAppend = time {
+      val (tAppend, _) = Rehearsal.timed {
         Ivf.appendToIndex(vecs.where(col("vec_id") >= stride), idxPath,
-          "vec_id", "embedding"): Unit
+          "vec_id", "embedding")
       }
       val kPol = Ivf.kForCells(n, targetCell = 512, kMin = 4)
       require(Ivf.resizeRecommended(k0, kPol),
         s"the 2x policy must fire at mult $m: k $k0 -> policy $kPol")
-      val tResize = time {
+      val (tResize, _) = Rehearsal.timed {
         Ivf.refitIndex(spark, idxPath, "vec_id", "embedding",
           resizeTo = Some(kPol))
       }
@@ -362,10 +312,9 @@ object ScaleRehearsalAnn {
           s"$recExact")
       val recResized = recallOf(idxPath, 4)
       val freshPath = s"/tmp/graft-scale-resize-fresh-${m}x"
-      rmrf(new java.io.File(freshPath))
-      val tFresh = time {
-        Ivf.buildPersistent(vecs, freshPath, "vec_id", "embedding",
-          k = kPol): Unit
+      Rehearsal.rmrf(freshPath)
+      val (tFresh, _) = Rehearsal.timed {
+        Ivf.buildPersistent(vecs, freshPath, "vec_id", "embedding", k = kPol)
       }
       val recFresh = recallOf(freshPath, 4)
       Staged.releaseAll()
@@ -374,6 +323,5 @@ object ScaleRehearsalAnn {
         f""""resize_sec":$tResize%.2f,"fresh_build_sec":$tFresh%.2f,""" +
         f""""recall_resized":$recResized%.4f,"recall_fresh":$recFresh%.4f}""")
     }
-    spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ops.{Bpe, Staged}
+import graft.ops.Bpe
 import graft.sources.Tables
 
 /** Scale rehearsal for the BPE fit (round 14): the 100 TB claim is
@@ -35,44 +36,37 @@ import graft.sources.Tables
   * mode fits 16 merges (the x72 setting).
   */
 object ScaleRehearsalBpe {
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("nmerges")) { runMergeCurve(args.drop(1)); return }
-    if (args.headOption.contains("local")) { runLocalCurve(args.drop(1)); return }
-    val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 5, 10)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-bpe")
-    import spark.implicits._
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale-bpe") { spark =>
+    val rest = args.toSeq.drop(1)
+    args.headOption match {
+      case Some("nmerges") => runMergeCurve(spark, Rehearsal.ints(rest, 16, 64, 256))
+      case _ => runCorpusCurve(spark, Rehearsal.ints(args.toSeq, 1, 5, 10))
+    }
+  }
 
+  private def runCorpusCurve(spark: SparkSession, mults: Seq[Int]): Unit = {
+    import spark.implicits._
+    val sfDir = Rehearsal.sfDir
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = base.count()
     require(nDocs > 0, s"no documents under $sfDir")
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
+    val stride = Rehearsal.stride(base, "doc_id")
 
-    var expect: Seq[(String, String)] = null
+    val expect = Rehearsal.same[Seq[(String, String)]](
+      "merge sequence drifted at multiplier")
     mults.foreach { m =>
       val corpus = (0 until m).map(i =>
         base.select(($"doc_id" + lit(i.toLong * stride)).as("doc_id"),
           $"text")).reduce(_ unionByName _)
       // warm pass at m=1 only would bias the curve; fit twice and keep
       // the second measurement so JIT/codegen warm-up is never billed
-      def once(): (Double, Seq[Bpe.Merge]) = {
-        val t0 = System.nanoTime()
-        val f = Bpe.fit(corpus, "text", nMerges = 16)
-        val merges = f.merges
-        val sec = (System.nanoTime() - t0) / 1e9
-        Staged.releaseAll()
-        (sec, merges)
-      }
+      def once() = Rehearsal.timed(Bpe.fit(corpus, "text", nMerges = 16).merges)
       once()
       val (sec, merges) = once()
-      val pairs = merges.map(mg => (mg.left, mg.right))
-      if (expect == null) expect = pairs
-      require(pairs == expect,
-        s"merge sequence drifted at multiplier $m: $pairs != $expect")
+      expect(m, merges.map(mg => (mg.left, mg.right)))
       println(f"""{"mult":$m,"docs":${nDocs * m},"fit_sec":$sec%.2f,""" +
         f""""merges":${merges.size}}""")
     }
-    spark.stop()
   }
 
   /** nMerges curve: fit time at several merge counts, per-merge
@@ -85,67 +79,16 @@ object ScaleRehearsalBpe {
     * with generation number); the 32k-merge bill is then the constant
     * × 32k, linear and honest.
     */
-  private def runMergeCurve(args: Array[String]): Unit = {
-    val counts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(16, 64, 256)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-bpe-nmerges")
-    import spark.implicits._
-    val corpus = Tables(spark, sfDir, "documents")
-      .select($"doc_id",
-        concat($"text", lit(" w"), md5($"doc_id".cast("string"))).as("text"))
+  private def runMergeCurve(spark: SparkSession, counts: Seq[Int]): Unit = {
+    val corpus = Tables(spark, Rehearsal.sfDir, "documents").select(col("doc_id"),
+      concat(col("text"), lit(" w"), md5(col("doc_id").cast("string"))).as("text"))
     // one warm fit so JIT/codegen warm-up is never billed to a count
-    Bpe.fit(corpus, "text", nMerges = 8): Unit
-    Staged.releaseAll()
+    Rehearsal.timed(Bpe.fit(corpus, "text", nMerges = 8))
     counts.foreach { n =>
-      val t0 = System.nanoTime()
-      val f = Bpe.fit(corpus, "text", nMerges = n)
-      val done = f.merges.size
-      val sec = (System.nanoTime() - t0) / 1e9
-      Staged.releaseAll()
+      val (sec, done) =
+        Rehearsal.timed(Bpe.fit(corpus, "text", nMerges = n).merges.size)
       println(f"""{"nmerges":$n,"merges_done":$done,"fit_sec":$sec%.2f,""" +
         f""""per_merge_sec":${sec / math.max(1, done)}%.4f}""")
     }
-    spark.stop()
-  }
-
-  /** The round-16 answer to the nMerges bill: the same merge counts
-    * (and the 32k production count) under [[Bpe.fitLocal]] — the
-    * driver-local loop over the bounded word table. Correctness face:
-    * the local fit's merge sequence is REQUIREd identical to the
-    * distributed fit's at the smallest count (the BpeSpec identity,
-    * re-proven at rehearsal scale). What must hold: total seconds, not
-    * hours — the per-merge cost is incremental-update work over
-    * affected words, not a scheduled Spark job.
-    *
-    * Usage: runMain graft.ScaleRehearsalBpe local [counts...]
-    * (default 256 4096 32768).
-    */
-  private def runLocalCurve(args: Array[String]): Unit = {
-    val counts = if (args.nonEmpty) args.map(_.toInt).toSeq
-      else Seq(256, 4096, 32768)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-bpe-local")
-    import spark.implicits._
-    val corpus = Tables(spark, sfDir, "documents")
-      .select($"doc_id",
-        concat($"text", lit(" w"), md5($"doc_id".cast("string"))).as("text"))
-    // the scale-level identity check (the spec's differential, on the
-    // rehearsal corpus): distributed and local agree merge-for-merge
-    val dist = Bpe.fit(corpus, "text", nMerges = 64).merges
-    Staged.releaseAll()
-    val loc = Bpe.fitLocal(corpus, "text", nMerges = 64).merges
-    require(loc == dist,
-      s"local fit drifted from distributed at 64 merges: $loc != $dist")
-    val vocab = Bpe.wordFreqs(corpus, "text").count()
-    counts.foreach { n =>
-      val t0 = System.nanoTime()
-      val f = Bpe.fitLocal(corpus, "text", nMerges = n)
-      val done = f.merges.size
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"mode":"local","vocab":$vocab,"nmerges":$n,""" +
-        f""""merges_done":$done,"fit_sec":$sec%.2f,""" +
-        f""""per_merge_ms":${sec * 1000 / math.max(1, done)}%.3f}""")
-    }
-    spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Staged, TextAnalysis}
+import graft.ops.Dedup
 import graft.sources.Tables
 
 /** Scale rehearsal for passage-level dedup (x32). Two replication modes
@@ -26,39 +27,31 @@ import graft.sources.Tables
   */
 object ScaleRehearsalPassage {
 
-  def main(args: Array[String]): Unit = {
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-passage")
-    import spark.implicits._
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale-passage")(
+    rehearse(_, Rehearsal.sfDir, Rehearsal.ints(args.toSeq, 1, 2, 5, 10)))
 
+  def rehearse(spark: SparkSession, sfDir: String,
+      multipliers: Seq[Int]): Unit = {
+    import spark.implicits._
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = base.count()
     require(nDocs > 0, s"no documents under $sfDir — nothing to rehearse")
-    // replica id stride derives from the corpus (a fixed constant would
-    // silently collide ids on a corpus with large doc_ids — the exact
-    // unguarded-offset defect class CurateMain was cited for)
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
+    val stride = Rehearsal.stride(base, "doc_id")
     val w = 3
     var baseKept = -1L
 
     multipliers.foreach { m =>
       def replicas(suffixed: Boolean) = (0 until m).map { r =>
-        val text =
-          if (suffixed)
-            array_join(transform(TextAnalysis.tokens($"text"),
-              x => concat(x, lit("x" + r))), " ")
-          else $"text"
+        val text = if (suffixed) Rehearsal.suffixed($"text", "x" + r) else $"text"
         base.select(($"doc_id" + lit(r * stride)).as("doc_id"),
           text.as("text"))
       }.reduce(_ unionByName _)
 
-      def run(df: org.apache.spark.sql.DataFrame): (Double, Long, Long) = {
-        val t0 = System.nanoTime()
-        val k = Dedup.passageDedup(df, "doc_id", "text", w)
-          .agg(sum($"n_kept"), sum($"n_dropped")).head()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Staged.releaseAll()
+      def run(df: DataFrame): (Double, Long, Long) = {
+        val (sec, k) = Rehearsal.timed {
+          Dedup.passageDedup(df, "doc_id", "text", w)
+            .agg(sum($"n_kept"), sum($"n_dropped")).head()
+        }
         (sec, k.getLong(0), k.getLong(1))
       }
 
@@ -76,6 +69,5 @@ object ScaleRehearsalPassage {
         f""""dec_sec":$decSec%.2f,"dec_kept":$decKept,"dec_dropped":$decDropped,""" +
         f""""verb_sec":$verbSec%.2f,"verb_kept":$verbKept,"verb_dropped":$verbDropped}""")
     }
-    spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{EmbedStats, Ivf, Similarity, Staged}
+import graft.ops.{EmbedStats, Ivf, Similarity}
 import graft.sources.Tables
 
 /** The PCA serving face (round 14): does projecting the corpus down to
@@ -52,14 +52,13 @@ import graft.sources.Tables
   * SPARK_GRAFT_SF_DIR picks the corpus.
   */
 object ScaleRehearsalPca {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale-pca") { spark =>
     val aniso = args.contains("aniso")
     val posArgs = args.filterNot(_ == "aniso")
     val dims = posArgs.lift(0).map(_.toInt).getOrElse(16)
     val k = posArgs.lift(1).map(_.toInt).getOrElse(10)
     val nQueries = posArgs.lift(2).map(_.toInt).getOrElse(64)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-pca")
+    val sfDir = Rehearsal.sfDir
     import spark.implicits._
 
     val raw = Tables(spark, sfDir, "embeddings").select($"vec_id", $"embedding")
@@ -71,8 +70,12 @@ object ScaleRehearsalPca {
         .as("embedding"))
     val n = emb.count()
     require(n > 0, s"no embeddings under $sfDir")
+    // the frames every face shares are persisted OUTSIDE Staged: the
+    // release after each timed probe must not drop them, or a full raw
+    // brute-force pass would be silently billed to every later face's
+    // probe_sec. The session's end frees them.
     // deterministic query sample: lowest ids (replay-stable)
-    val queries = Staged(emb.orderBy($"vec_id").limit(nQueries))
+    val queries = emb.orderBy($"vec_id").limit(nQueries).persist()
 
     val fit = EmbedStats.pca(emb, "embedding", k = dims)
     val varKept = fit.eigenvalues.sum /
@@ -86,9 +89,9 @@ object ScaleRehearsalPca {
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }
     // ONE raw-truth pass shared by every face (the a08 discipline)
-    val truth = Staged(Similarity.bruteForceTopKBatch(
+    val truth = Similarity.bruteForceTopKBatch(
         emb, queries, "vec_id", "embedding", "vec_id", k)
-      .select($"query_id", $"vec_id"))
+      .select($"query_id", $"vec_id").persist()
     val nTruth = truth.count()
 
     def face(name: String, corpus: org.apache.spark.sql.DataFrame,
@@ -96,34 +99,25 @@ object ScaleRehearsalPca {
       val path = s"$root/$name"
       val idx = Ivf.buildPersistent(corpus, path, "vec_id", vecCol, k = 16)
       Seq(1, 2, 4).foreach { nprobe =>
-        val t0 = System.nanoTime()
-        val ann = Ivf.topKBatch(idx, qs, "vec_id", vecCol, "vec_id", k,
-            nprobe = nprobe)
-          .select($"query_id", $"vec_id")
-        val hit = truth.join(ann, Seq("query_id", "vec_id"), "left_semi").count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, hit) = Rehearsal.timed {
+          val ann = Ivf.topKBatch(idx, qs, "vec_id", vecCol, "vec_id", k,
+              nprobe = nprobe)
+            .select($"query_id", $"vec_id")
+          truth.join(ann, Seq("query_id", "vec_id"), "left_semi").count()
+        }
         val recall = hit.toDouble / nTruth
         println(f"""{"face":"$name","dims":${if (name == "raw") 64 else dims},""" +
           f""""nprobe":$nprobe,"recall":$recall%.4f,""" +
           f""""index_bytes":${bytesOf(path)},"probe_sec":$sec%.2f}""")
       }
-      // no Staged.release() here: the queue is GLOBAL, and draining it
-      // would unpersist the shared brute-force `truth` (and the
-      // projected corpora), silently billing a full raw brute-force
-      // pass to every later face's probe_sec
     }
 
     println(f"""{"fit_dims":$dims,"aniso":$aniso,"variance_kept":$varKept%.4f,"n_queries":$nQueries,"corpus":$n}""")
     face("raw", emb, queries, "embedding")
-    val projC = Staged(EmbedStats.pcaProjectVec(emb, "vec_id", "embedding", fit))
-    val projQ = Staged(EmbedStats.pcaProjectVec(queries, "vec_id", "embedding", fit))
-    face("pca", projC, projQ, "proj")
-    val whC = Staged(EmbedStats.pcaProjectVec(emb, "vec_id", "embedding", fit,
-      whiten = true))
-    val whQ = Staged(EmbedStats.pcaProjectVec(queries, "vec_id", "embedding", fit,
-      whiten = true))
-    face("pca_whitened", whC, whQ, "proj")
-    Staged.release()
-    spark.stop()
+    def projected(df: org.apache.spark.sql.DataFrame, whiten: Boolean) =
+      EmbedStats.pcaProjectVec(df, "vec_id", "embedding", fit, whiten = whiten)
+        .persist()
+    face("pca", projected(emb, false), projected(queries, false), "proj")
+    face("pca_whitened", projected(emb, true), projected(queries, true), "proj")
   }
 }

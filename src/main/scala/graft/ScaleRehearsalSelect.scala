@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Cooccur, Decontam, Dedup, Dsir, Scrub, Staged, TextAnalysis, TfIdf}
+import graft.ops.{Cooccur, Decontam, Dedup, Dsir, Scrub, TextAnalysis, TfIdf}
 import graft.sources.Tables
 
 /** Scale rehearsal for the selection/scoring family (round 11): DSIR
@@ -26,84 +26,61 @@ import graft.sources.Tables
   */
 object ScaleRehearsalSelect {
 
-  def main(args: Array[String]): Unit = {
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 5, 20)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-select")
-
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale-select") { spark =>
+    val sfDir = Rehearsal.sfDir
     val base = Tables(spark, sfDir, "documents").select("doc_id", "text")
     // the target corpus is FIXED (the realistic shape: a curated
     // quality set) while the raw crawl grows
     val target = base.where(col("doc_id") % 5 === 0)
 
-    multipliers.foreach { k =>
-      val path = s"/tmp/graft-scale-docs-${k}x"
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        ScaleRehearsal.scaledDocs(base, k)
-          .repartition(32).write.mode("overwrite").parquet(path)
-      }
-      val docs = spark.read.parquet(path)
+    Rehearsal.ints(args.toSeq, 1, 5, 20).foreach { k =>
+      val docs = spark.read.parquet(ScaleRehearsal.scaledDocsPath(base, sfDir, k))
       val n = docs.count()
 
-      def time(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val rows = f
-        ((System.nanoTime() - t0) / 1e9, rows)
+      val (tFit, modelPath) = Rehearsal.timed {
+        Rehearsal.cached(s"graft-scale-dsir-${k}x", sfDir,
+            Dsir.modelReady(spark, _)) { p =>
+          Dsir.writeModel(docs, target, "text", p)
+        }
       }
-
-      val modelPath = s"/tmp/graft-scale-dsir-${k}x"
-      val (tFit, nModel) = time {
-        if (!Dsir.modelReady(spark, modelPath))
-          Dsir.writeModel(docs, target, "text", modelPath)
-        spark.read.parquet(s"$modelPath/lr").count()
-      }
-      Staged.releaseAll()
+      val nModel = spark.read.parquet(s"$modelPath/lr").count()
       // fixed probe batch: replica-0 docs ending in 0 (constant set)
       val batch = docs.where(col("doc_id") % 10 === 0 &&
         col("doc_id") < 10000000L)
-      val (tProbe, nProbe) = time {
+      val (tProbe, nProbe) = Rehearsal.timed {
         Dsir.scoreIndexed(batch, modelPath, "doc_id", "text").count()
       }
-      Staged.releaseAll()
-      val (tScoreAll, nScoreAll) = time {
+      val (tScoreAll, nScoreAll) = Rehearsal.timed {
         Dsir.importanceWeights(docs, target, "doc_id", "text").count()
       }
-      Staged.releaseAll()
-      val (tPmi, nPmi) = time {
+      val (tPmi, nPmi) = Rehearsal.timed {
         Cooccur.pmiTopPairs(docs, "doc_id", "text").count()
       }
-      Staged.releaseAll()
-      val (tZipf, _) = time {
+      val (tZipf, _) = Rehearsal.timed {
         TextAnalysis.zipfFit(docs, "text").count()
       }
-      Staged.releaseAll()
-      val (tTfidf, nTfidf) = time {
+      val (tTfidf, nTfidf) = Rehearsal.timed {
         TfIdf.cosinePairs(docs, "doc_id", "text").count()
       }
-      Staged.releaseAll()
       // passage-family ops need a domain column: 20 sources per
       // replica (uniform by id) — replicas' rotated texts keep passage
       // supports constant, so cost must track corpus size linearly
       val docsS = docs.withColumn("source",
         concat(lit("src"), pmod(col("doc_id"), lit(20))))
-      val (tDup, _) = time {
+      val (tDup, _) = Rehearsal.timed {
         Dedup.duplicationProfile(docsS, "doc_id", "text", window = 3).count()
       }
-      Staged.releaseAll()
-      val (tXso, nXso) = time {
+      val (tXso, nXso) = Rehearsal.timed {
         Decontam.crossSourceOverlap(docsS, "source", "text", window = 5).count()
       }
-      Staged.releaseAll()
-      val (tBoil, _) = time {
+      val (tBoil, _) = Rehearsal.timed {
         Scrub.removeBoilerplate(docsS, "doc_id", "source", "text",
           window = 3, minFrac = 0.05, minDocs = 2).count()
       }
-      Staged.releaseAll()
-      val (tDiff, _) = time {
+      val (tDiff, _) = Rehearsal.timed {
         TextAnalysis.corpusDiff(docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 =!= 0), "text").count()
       }
-      Staged.releaseAll()
 
       println(s"""{"k":$k,"docs":$n,"model_rows":$nModel,""" +
         s""""fit_sec":${f"$tFit%.2f"},"probe_sec":${f"$tProbe%.2f"},""" +
@@ -115,6 +92,5 @@ object ScaleRehearsalSelect {
         s""""xso_rows":$nXso,"boiler_sec":${f"$tBoil%.2f"},""" +
         s""""diff_sec":${f"$tDiff%.2f"}}""")
     }
-    spark.stop()
   }
 }

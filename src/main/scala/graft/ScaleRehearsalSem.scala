@@ -107,62 +107,50 @@ object ScaleRehearsalSem {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDirEarly = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  def main(args: Array[String]): Unit = Rehearsal.run("graft-scale-sem") { spark =>
+    val sfDir = Rehearsal.sfDir
     if (args.headOption.contains("recall")) {
-      val spark = GraftSession.local("graft-scale-sem")
       val ts = if (args.length > 1) args.drop(1).map(_.toDouble).toSeq
         else Seq(0.2, 0.3, 0.5, 0.7)
-      recallMode(spark, sfDirEarly, ts.sorted)
-      spark.stop()
-      return
+      recallMode(spark, sfDir, ts.sorted)
+    } else {
+      val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
+      Rehearsal.ints(args.toSeq, 1, 2, 5, 10, 20)
+        .foreach(m => measure(spark, ScaleRehearsalAnn.scaledVecsPath(base, sfDir, m), m))
     }
-    val multipliers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10, 20)
-    val sfDir = sfDirEarly
-    val spark = GraftSession.local("graft-scale-sem")
+  }
 
-    val base = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
-    val dim = base.select(size(col("embedding"))).head().getInt(0)
+  private def measure(spark: SparkSession, path: String, m: Int): Unit = {
+    val vecs = spark.read.parquet(path)
+    val n = vecs.count()
 
-    multipliers.foreach { m =>
-      // sfDir-fingerprinted, shared with ScaleRehearsalAnn (see there)
-      val path = s"/tmp/graft-scale-vecs-${graft.queries.OracleDump.sfTag(sfDir)}-${m}x"
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        ScaleRehearsalAnn.scaledVecs(base, m, dim)
-          .repartition(32).write.mode("overwrite").parquet(path)
-      }
-      val vecs = spark.read.parquet(path)
-      val n = vecs.count()
-
-      def run(k: Int): (Double, Long, Long) = {
-        val idx = Ivf.build(vecs, "vec_id", "embedding", k = k)
-        idx.assigned.persist()
-        idx.assigned.count() // materialize: time the dedup, not the fit
-        val t0 = System.nanoTime()
+    def run(k: Int): (Double, Long, Long) = {
+      val idx = Ivf.build(vecs, "vec_id", "embedding", k = k)
+      idx.assigned.persist()
+      idx.assigned.count() // materialize: time the dedup, not the fit
+      val (sec, (kept, drops)) = Rehearsal.timed {
         val kept = SemanticDedup.keptCells(idx.assigned)
-        val drops = SemanticDedup.dropListFromKept(
-          kept, "vec_id", "embedding", threshold = 0.3).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // pair volume the blocking admits: Σ c·(c−1)/2 over kept cells
-        val pairBudget = kept.groupBy(col("cluster"))
-          .agg(count(lit(1)).as("c"))
-          .agg(sum(expr("c * (c - 1) DIV 2"))).head().getLong(0)
-        idx.assigned.unpersist()
-        Staged.releaseAll()
-        (sec, drops, pairBudget)
+        (kept, SemanticDedup.dropListFromKept(
+          kept, "vec_id", "embedding", threshold = 0.3).count())
       }
-
-      // rehearsal-scaled policy: same kForCells function, targetCell
-      // shrunk so k ∝ N is exercised across the 1-20× range (with the
-      // production 4096 target, every rehearsal size clamps to kMin and
-      // the policy-vs-fixed contrast would be invisible)
-      val kPolicy = Ivf.kForCells(n, targetCell = 512, kMin = 4)
-      val (tPolicy, dropsPolicy, pairsPolicy) = run(kPolicy)
-      val (tFixed, dropsFixed, pairsFixed) = run(16)
-      println(s"""{"mult":$m,"vecs":$n,"k_policy":$kPolicy,""" +
-        s""""policy_sec":$tPolicy,"policy_drops":$dropsPolicy,"policy_pairs":$pairsPolicy,""" +
-        s""""fixed16_sec":$tFixed,"fixed16_drops":$dropsFixed,"fixed16_pairs":$pairsFixed}""")
+      // pair volume the blocking admits: Σ c·(c−1)/2 over kept cells
+      val pairBudget = kept.groupBy(col("cluster"))
+        .agg(count(lit(1)).as("c"))
+        .agg(sum(expr("c * (c - 1) DIV 2"))).head().getLong(0)
+      idx.assigned.unpersist()
+      Staged.releaseAll()
+      (sec, drops, pairBudget)
     }
-    spark.stop()
+
+    // rehearsal-scaled policy: same kForCells function, targetCell
+    // shrunk so k ∝ N is exercised across the 1-20× range (with the
+    // production 4096 target, every rehearsal size clamps to kMin and
+    // the policy-vs-fixed contrast would be invisible)
+    val kPolicy = Ivf.kForCells(n, targetCell = 512, kMin = 4)
+    val (tPolicy, dropsPolicy, pairsPolicy) = run(kPolicy)
+    val (tFixed, dropsFixed, pairsFixed) = run(16)
+    println(s"""{"mult":$m,"vecs":$n,"k_policy":$kPolicy,""" +
+      s""""policy_sec":$tPolicy,"policy_drops":$dropsPolicy,"policy_pairs":$pairsPolicy,""" +
+      s""""fixed16_sec":$tFixed,"fixed16_drops":$dropsFixed,"fixed16_pairs":$pairsFixed}""")
   }
 }

@@ -290,44 +290,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Connected components over near-dup pairs: the final step of corpus
-    * dedup — group transitively-linked near-duplicates and elect one
-    * representative (min id) per cluster, so "drop all but the rep"
-    * removes chains A~B~C even when A and C themselves don't pair.
-    *
-    * Algorithm: iterative min-label propagation with pointer jumping.
-    * Each round every node takes the min of its own label and its
-    * neighbors' labels (one co-partitioned join + one aggregation),
-    * then each label short-circuits to its label's label (the classic
-    * pointer-jump; both steps only decrease labels and both stay inside
-    * the component, so the fixpoint is unchanged — the per-component
-    * min). Converges in O(log diameter) rounds — near-dup clusters are
-    * shallow, so this is 1-3 rounds in practice, bounded by `maxIter`.
-    * The driver-side loop only checks a per-round scalar witness, never
-    * collects data. At 100 TB-scale iteration counts, swap the
-    * per-round persist for checkpointing to truncate lineage.
-    *
-    * Input: (id_a, id_b) pairs. Output: (doc_id, cluster_rep) for every
-    * doc that appears in at least one pair.
-    *
-    * Convergence is VERIFIED, never assumed: if `maxIter` rounds exhaust
-    * while labels are still changing (a cluster whose min-label distance
-    * outruns `maxIter` propagate+jump rounds — e.g. an adversarial chain
-    * corpus far longer than 2^maxIter), the labels are only partially
-    * propagated and returning them would silently mislabel clusters.
-    * `strict=true` (default) raises instead; `strict=false` logs a
-    * warning and returns the partial labels for callers that prefer a
-    * best-effort answer.
-    *
-    * EVERY round's label table is `localCheckpoint`ed: the pointer-jump
-    * self-join references the propagated generation twice, so an
-    * un-truncated plan would double in size per round (Catalyst
-    * re-analysis and plan stringification go exponential — measured as
-    * a driver OOM near round 10). `checkpointInterval` is retained for
-    * source compatibility but is no longer consulted. (On a real
-    * cluster with a fault-tolerance requirement, swap for reliable
-    * `checkpoint` with a checkpoint dir — same seam.)
-    */
   /** Partition count for the CC loop, derived from the MEASURED directed
     * edge count (guide §2: scale-adaptive partitioning, never a constant
     * tuned for one deployment): ~4M edge rows (two ids) per partition ≈
@@ -339,16 +301,17 @@ object Dedup {
   private[graft] def loopPartitions(edgeRows: Long): Int =
     math.min(4096L, math.max(1L, (edgeRows + 3999999L) / 4000000L)).toInt
 
-  /** The Long-id fast path of [[connectedComponents]]: the same
-    * seed/propagate+jump/witness algorithm on primitive-long pair RDDs.
+  /** The loop of [[connectedComponents]], on primitive-long pair RDDs.
     * One Catalyst execution (the pair pipeline, once), then the loop
-    * runs free of per-round planning/AQE latency: each round is one
-    * co-partitioned join + reduceByKey(min) + one jump join + one
-    * BigInt-sum action (exact witness at any node count). Self-loops
-    * are emitted inline with both directed edges — duplicates are
-    * harmless under min, so the distinct the DataFrame path needs is
-    * skipped entirely. Returns the same localCheckpoint'ed result leaf,
-    * tracked for [[Staged.releaseCheckpoints]].
+    * runs free of per-round planning/AQE latency — a Catalyst action on
+    * a tiny round plan costs ~0.17-0.3 s of fixed driver latency
+    * (OPTIMIZATION_r21.md), an RDD stage schedules in ~10 ms: each
+    * round is one co-partitioned join + reduceByKey(min) + one jump
+    * join + one BigInt-sum action (exact witness at any node count).
+    * Self-loops are emitted inline with both directed edges —
+    * duplicates are harmless under min, so no distinct is needed.
+    * Returns the localCheckpoint'ed result leaf, tracked for
+    * [[Staged.releaseCheckpoints]].
     */
   private def connectedComponentsLong(
       pairs: DataFrame, maxIter: Int, strict: Boolean): DataFrame = {
@@ -416,9 +379,9 @@ object Dedup {
         if (strict) throw new IllegalStateException(msg)
         else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
       }
-      // same result contract as the DataFrame path: a materialized leaf
-      // (re-execution must not replay the loop), registered for the
-      // caller's post-consumption Staged.releaseCheckpoints()
+      // a materialized leaf (re-execution must not replay the loop),
+      // registered for the caller's post-consumption
+      // Staged.releaseCheckpoints()
       val aN = pairs.schema("id_a").nullable
       val bN = pairs.schema("id_b").nullable
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -442,207 +405,87 @@ object Dedup {
     }
   }
 
+  /** Connected components over near-dup pairs: the final step of corpus
+    * dedup — group transitively-linked near-duplicates and elect one
+    * representative (min id) per cluster, so "drop all but the rep"
+    * removes chains A~B~C even when A and C themselves don't pair.
+    *
+    * Input: (id_a, id_b) pairs. Output: (doc_id, cluster_rep), in the
+    * input id type, for every doc that appears in at least one pair.
+    *
+    * Algorithm: ONE loop ([[connectedComponentsLong]]), iterative
+    * min-label propagation with pointer jumping on primitive-long pair
+    * RDDs. Each round every node takes the min of its own label and its
+    * neighbors' labels (one co-partitioned join + one reduceByKey), then
+    * each label short-circuits to its label's label (the classic
+    * pointer-jump; both steps only decrease labels and both stay inside
+    * the component, so the fixpoint is unchanged — the per-component
+    * min). Converges in O(log diameter) rounds — near-dup clusters are
+    * shallow, so this is 1-3 rounds in practice, bounded by `maxIter`.
+    * The driver-side loop only checks a per-round scalar witness, never
+    * collects data.
+    *
+    * Ids that are not `LongType` (string doc ids, decimals) are first
+    * encoded onto dense longs: the sorted distinct ids of both columns
+    * are numbered with `zipWithIndex`, so the numbering preserves
+    * Spark's ordering of the id type — the smallest dense label decodes
+    * to the smallest id, and the min-id rep contract holds. The loop
+    * runs on the encoded pairs, and each output column is decoded with
+    * one join.
+    *
+    * Convergence is VERIFIED, never assumed: if `maxIter` rounds exhaust
+    * while labels are still changing (a cluster whose min-label distance
+    * outruns `maxIter` propagate+jump rounds — e.g. an adversarial chain
+    * corpus far longer than 2^maxIter), the labels are only partially
+    * propagated and returning them would silently mislabel clusters.
+    * `strict=true` (default) raises instead; `strict=false` logs a
+    * warning and returns the partial labels for callers that prefer a
+    * best-effort answer.
+    *
+    * The result is a `localCheckpoint`ed leaf (re-executing it must not
+    * replay the loop), tracked for [[Staged.releaseCheckpoints]].
+    */
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 20,
-      checkpointInterval: Int = 8,
       strict: Boolean = true): DataFrame = {
-    // Long ids (every production caller — doc_id/vec_id are BIGINT) take
-    // the RDD loop: a Catalyst action on a tiny leaf-based round plan
-    // still costs ~0.17-0.3 s of fixed planning/AQE/codegen latency per
-    // action (measured, OPTIMIZATION_r21.md), and the loop runs 2 actions
-    // per round; RDD stages schedule in ~10 ms. Identical semantics
-    // (same seed, same propagate+jump rounds, same witness, same strict
-    // contract) — the DataFrame path below remains for string/decimal
-    // label types and is spec-pinned on those.
-    if (pairs.schema("id_a").dataType == org.apache.spark.sql.types.LongType &&
-        pairs.schema("id_b").dataType == org.apache.spark.sql.types.LongType)
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    if (pairs.schema("id_a").dataType == LongType &&
+        pairs.schema("id_b").dataType == LongType)
       return connectedComponentsLong(pairs, maxIter, strict)
-    // Plan-shape decisions that are invisible in the data flow but
-    // dominate wall-clock (measured 135 s for a 3,615-edge graph whose
-    // actual data work is milliseconds):
-    //  - localCheckpoint the edges, not a plain persist: every round's
-    //    plan embeds the edge PLAN (not just its blocks), and with an
-    //    expensive upstream pair pipeline (an embedding self-join, an
-    //    LSH verify) Catalyst re-analysis of that subtree every round
-    //    is the cost. Checkpointing collapses it to a leaf.
-    //  - SELF-LOOPS instead of a labels∪propagated union: min(own,
-    //    neighbors) via a (u,u) edge per node means each round's plan
-    //    references `labels` exactly ONCE per propagate (one join + one
-    //    agg), so the logical tree grows linearly in rounds — the union
-    //    formulation referenced labels twice and the tree DOUBLED every
-    //    round, exponential until the checkpoint cadence truncated it.
-    //  - ONE reference to `pairs` (posexplode of the two directed
-    //    struct forms): the old bidir-union shape referenced pairs
-    //    twice and the self-loop distinct doubled it again — an
-    //    UNSTAGED pair pipeline (x20's raw LSH verify) executed up to
-    //    4x inside the edge materialization.
-    //  - explicit size-derived partitioning: the loop repartitions the
-    //    edges ONCE to n = f(edge count) partitions and keeps every
-    //    label generation co-partitioned on the same key count, so each
-    //    round is one co-partitioned join + one n-partition exchange —
-    //    never spark.sql.shuffle.partitions-many tiny tasks per round.
-    //    n scales with the measured edge count (100 TB pair sets get
-    //    thousands of partitions, a 20k-edge fixture gets 1), so the
-    //    loop is scale-adaptive without AQE's per-stage re-planning
-    //    latency (~0.3-0.8 s/round at 32 conf partitions, measured in
-    //    r21 — the dominant cost of every LSH+CC query).
-    val bidir = pairs.select(explode(array(
-        struct(col("id_a").as("u"), col("id_b").as("v")),
-        struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-    // materialize the directed edges once (ONE pass over the pair
-    // pipeline), count them to size the loop's partitioning, then lay
-    // out the final edge table (self-loops appended) hash-partitioned
-    // and sorted on u so every round's join probe reuses the layout
-    val bidirCk = bidir.localCheckpoint()
-    val nPart = loopPartitions(bidirCk.count())
-    val edges = bidirCk
-      .union(bidirCk.select(col("u")).distinct().select(col("u"), col("u").as("v")))
-      .repartition(nPart, col("u"))
-      .sortWithinPartitions("u")
-      .localCheckpoint()
-    releaseLabels(bidirCk, keep = Set.empty)
-    // the edges leaf appears inside every generation's plan; per-round
-    // releases must never free IT (its truncated lineage can't recompute)
-    val edgesRddIds = edges.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
-    // seed = min(self, direct neighbors): the self-loops put u itself
-    // in min(v), folding the first propagation round into the init agg;
-    // the groupBy rides the edges' hash layout — no exchange. Every
-    // generation is a localCheckpoint LEAF: pointer jumping references
-    // the propagated table twice per round, which would double the
-    // logical tree every round (Catalyst re-analysis, and the AQE plan
-    // string alone, go exponential — measured OOM at round ~10);
-    // truncating each generation keeps every round's plan constant-size
-    // and makes releasing the previous generation immediately safe (no
-    // later plan references its blocks).
-    var labels = edges.groupBy(col("u"))
-      .agg(min(col("v")).as("lab"))
-      .select(col("u").as("id"), col("lab"))
-      .localCheckpoint()
-    // convergence witness, two forms by label type:
-    //  - integral/decimal(scale 0) labels: min-label propagation only
-    //    ever DECREASES labels, so Σlab (exact, decimal — no long
-    //    overflow at any node count) is strictly monotone until
-    //    fixpoint: equal sums ⟺ no label changed. One tiny aggregation
-    //    per round instead of a labels⨝next comparison join.
-    //  - any other label type (string doc ids, floats): the decimal
-    //    cast is lossy or NULL, so the sum is NOT a valid witness —
-    //    a NULL-ing cast would make every round's sum ZERO and declare
-    //    convergence after round 1 with partially-propagated labels.
-    //    Fall back to the direct labels⨝next inequality count (one
-    //    co-partitioned join per round; both sides share the id-hash
-    //    partitioning, so no extra shuffle).
-    val sumWitnessSafe = labels.schema("lab").dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
-      case _ => false
-    }
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val d = df.agg(sum(col("lab").cast(
-        org.apache.spark.sql.types.DecimalType(38, 0)))).head().getDecimal(0)
-      if (d == null) java.math.BigDecimal.ZERO else d // no nodes: no pairs
-    }
-    def changedCount(next: DataFrame, cur: DataFrame): Long =
-      next.as("n").join(cur.as("c"), col("n.id") === col("c.id"))
-        .where(col("n.lab") =!= col("c.lab")).count()
+    val spark = pairs.sparkSession
+    val p = pairs.select(col("id_a"), col("id_b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ids = p.select(col("id_a").as("id"))
+      .union(p.select(col("id_b").as("id"))).distinct().orderBy("id")
+    val idType = ids.schema("id").dataType
+    // numbered in sort order: dense label order is id order
+    val numbered = ids.rdd.zipWithIndex()
+      .map { case (r, i) => org.apache.spark.sql.Row(r.get(0), i) }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def dict(id: String, dense: String): DataFrame =
+      spark.createDataFrame(numbered, StructType(Seq(StructField(id, idType),
+        StructField(dense, LongType, nullable = false))))
     try {
-    var prevSum = if (sumWitnessSafe) labelSum(labels) else null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // each edge (u,v) ships lab(u) to v; the self-loop ships a node
-      // its own label, so the min is min(own, neighbors) without a
-      // second reference to `labels`. The repartition BEFORE the agg
-      // pins the round's one exchange at the loop's own n (the groupBy
-      // then rides that layout), and the propagated generation keeps
-      // the same (key, n) partitioning the edges have — the join never
-      // re-shuffles either side.
-      val prop = Staged(edges.join(labels, edges("u") === labels("id"))
-        .select(col("v").as("id"), col("lab"))
-        .repartition(nPart, col("id"))
-        .groupBy("id").agg(min("lab").as("lab")))
-      // pointer-jump folded into every round (min-label preserving:
-      // lab(x) is always the id of a component member, so lab(lab(x))
-      // is too, and both only decrease): a diameter-d chain converges
-      // in O(log d) rounds instead of d — the r21 measurement showed
-      // loose-threshold pair graphs needing 10 propagate-only rounds,
-      // each round costing fixed driver latency regardless of data.
-      // `prop` is persisted so its two references below compute once.
-      val jump = prop.select(col("id").as("__jid"), col("lab").as("__jlab"))
-      val next = prop.join(jump, prop("lab") === jump("__jid"), "left")
-        .select(prop("id"),
-          least(col("lab"), coalesce(col("__jlab"), col("lab"))).as("lab"))
-        .repartition(nPart, col("id"))
-        .localCheckpoint() // → constant-size leaf (see seed note)
-      if (sumWitnessSafe) {
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-      } else {
-        converged = changedCount(next, labels) == 0L
-      }
-      // next is a truncated leaf: nothing downstream references the
-      // retired generation or this round's propagated table any more
-      releaseLabels(labels, keep = edgesRddIds)
-      releaseLabels(prop, keep = edgesRddIds)
-      labels = next
-      i += 1
-    }
-    if (!converged) {
-      val msg = s"connectedComponents did not converge within $maxIter rounds " +
-        "(a cluster's min-label distance outruns maxIter propagate+jump " +
-        "rounds); labels are partially propagated"
-      if (strict) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    // return a materialized leaf: the caller's plan must not reference
-    // the checkpointed edges (their blocks are released in the finally
-    // and the truncated lineage cannot recompute), and re-executing
-    // the result must not replay the whole loop
-    val result = labels
-      .select(col("id").as("doc_id"), col("lab").as("cluster_rep"))
-      .localCheckpoint()
-    // register the leaf for the caller's post-consumption
-    // Staged.releaseCheckpoints() (its own queue — a plain release()
-    // from unrelated code can't destroy the unconsumed result):
-    // repeated calls (a bench sweep's warm-up + timed runs, rehearsal
-    // multipliers) would otherwise accumulate checkpoint blocks
-    // nothing can reclaim
-    result.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        Staged.trackRdd(l.rdd)
-    }: Unit
-    result
+      val dense = connectedComponentsLong(
+        p.join(dict("id_a", "a"), "id_a").join(dict("id_b", "b"), "id_b")
+          .select(col("a").as("id_a"), col("b").as("id_b")),
+        maxIter, strict)
+      val decoded = Staged.checkpointed(dense
+        .join(dict("doc", "doc_id"), "doc_id")
+        .join(dict("rep", "cluster_rep"), "cluster_rep")
+        .select(col("doc").as("doc_id"), col("rep").as("cluster_rep")))
+      // the dense leaf is consumed by the (eager) decode checkpoint
+      dense.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          l.rdd.unpersist(blocking = false)
+      }: Unit
+      decoded
     } finally {
-      // runs on the strict-non-convergence throw path too — the loop's
-      // working state must never outlive the call
-      releaseLabels(labels, keep = Set.empty)
-      releaseLabels(edges, keep = Set.empty)
+      numbered.unpersist(blocking = false)
+      p.unpersist(blocking = false)
     }
   }
-
-  /** Release a retired label generation. `unpersist` only clears
-    * CacheManager entries, which localCheckpoint'ed rounds don't have —
-    * their blocks live on the checkpointed RDD inside the LogicalRDD
-    * node, so those RDDs are unpersisted explicitly. RDDs in `keep`
-    * (the loop's edges leaf, which every generation's plan embeds) are
-    * left alone.
-    */
-  private def releaseLabels(df: DataFrame, keep: Set[Int]): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD
-          if !keep.contains(l.rdd.id) =>
-        l.rdd.unpersist(blocking = false)
-    }: Unit
-  }
-
   // ---- bucketed index layout ------------------------------------------
   // The persisted index tables (LSH band table, shingle table, passage
   // table) are written as BUCKETED + SORTED external parquet tables on

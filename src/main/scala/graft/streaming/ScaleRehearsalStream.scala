@@ -1,416 +1,281 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.GraftSession
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Rehearsal
 import graft.ops.{Dedup, Staged, TextAnalysis}
 import graft.sources.Tables
 
-/** Scale rehearsal for the STREAMING passage-dedup epoch index (round
-  * 10): hold the probe batch FIXED while the number of committed epoch
-  * partitions grows — the curve that must stay flat for the
-  * continuous-ingest face to mean anything at 100 TB, now that each
-  * epoch partition is a bucketed table probed via chained
-  * Exchange-free anti-joins (see [[Streams.passageDedupStream]]).
+/** Scale rehearsals for the streaming indexes and monitors, one mode
+  * per face (see each runner's doc):
+  *  - the fixed-batch / growing-epoch-index curves ([[epochCurve]]): the
+  *    passage-dedup epoch index (no flag, round 10 — the curve that must
+  *    stay flat for the continuous-ingest face to mean anything at
+  *    100 TB, now that each epoch partition is a bucketed table probed
+  *    via chained Exchange-free anti-joins, see
+  *    [[Streams.passageDedupStream]]), `--quote`, `--novelty` and
+  *    `--health`;
+  *  - the live-stream curves ([[liveCurve]]): `--live`, `--qlive` and
+  *    `--hh`;
+  *  - the maintenance loops and the capstone ladder: `--maintain`,
+  *    `--maintain-bpe` and `--ladder`.
   *
-  * Epoch content is DECORRELATED (per-epoch token suffix): each day
-  * contributes fresh passages, so the index grows E× while the batch's
-  * true suppressions stay those against epoch 0 — constant across E, a
-  * built-in correctness face. Each epoch count is measured twice: with
-  * the live per-epoch partitions (chain length = E), then after
-  * [[Streams.compactPassageIndex]] (chain length ≤ 2) — the pair shows
-  * both that the chained probe does not degrade with E and what
-  * compaction buys back when E gets long.
-  *
-  * `--live [nEpochs] [maxChain]` (default 32, 8) instead drives the
-  * REAL stream — MemoryStream → [[Streams.passageDedupStream]] with
-  * its auto-compaction policy — one decorrelated batch per epoch, and
-  * reports per-epoch wall time plus the on-disk chain length. This is
-  * the unattended-operation face: the chain must stay ≤ maxChain+1
-  * and per-epoch cost flat with ZERO manual compaction calls.
-  *
-  * Usage: runMain graft.streaming.ScaleRehearsalStream [epochCounts...]
-  * (default 1 4 8 16)
+  * Usage: runMain graft.streaming.ScaleRehearsalStream [mode] [ints...]
+  * (no mode: epoch counts, default 1 4 8 16)
   */
 object ScaleRehearsalStream {
 
-  private case class Doc(doc_id: Long, text: String)
+  private[streaming] case class Doc(doc_id: Long, text: String)
+  private[streaming] case class Vec(vec_id: Long, embedding: Seq[Float])
+
+  private case class Mode(app: String,
+      body: (SparkSession, String, Seq[String]) => Unit,
+      conf: Map[String, String] = Map.empty)
+
+  import Rehearsal.{intAt, ints}
+
+  private val modes: Map[String, Mode] = Map(
+    "" -> Mode("graft-scale-stream",
+      (s, sf, a) => runPassage(s, sf, ints(a, 1, 4, 8, 16))),
+    "--quote" -> Mode("graft-scale-quote",
+      (s, sf, a) => runQuotation(s, sf, ints(a, 1, 4, 8, 16))),
+    "--novelty" -> Mode("graft-scale-novelty",
+      (s, sf, a) => runNovelty(s, sf, ints(a, 1, 4, 8, 16))),
+    "--health" -> Mode("graft-scale-health",
+      (s, sf, a) => runHealth(s, sf, ints(a, 1, 4, 8, 16))),
+    "--live" -> Mode("graft-scale-stream-live",
+      (s, sf, a) => runLive(s, sf, intAt(a, 0, 32), intAt(a, 1, 8))),
+    "--qlive" -> Mode("graft-scale-qlive",
+      (s, sf, a) => runQuotationLive(s, sf, intAt(a, 0, 24), intAt(a, 1, 6))),
+    "--hh" -> Mode("graft-scale-stream-hh",
+      (s, sf, a) => runHeavyHitters(s, sf, intAt(a, 0, 32), intAt(a, 1, 64))),
+    "--maintain" -> Mode("graft-scale-maintain",
+      (s, sf, a) => runMaintain(s, sf, intAt(a, 0, 5), intAt(a, 1, 2))),
+    "--maintain-bpe" -> Mode("graft-scale-maintain-bpe",
+      (s, sf, a) => runMaintainBpe(s, sf, intAt(a, 0, 5), intAt(a, 1, 2),
+        intAt(a, 2, 1024))),
+    // one JVM hosts 2·nDays day-jobs back to back (production runs one
+    // driver per day): without a bound the SQL status store retains
+    // 1000 executions' plan metrics/descriptions (~1M SQLPlanMetric
+    // instances, GBs, measured by heap histogram at day 6) — an
+    // artifact of the REHEARSAL shape, capped so the per-day heap_mb
+    // column reads the engine, not the UI store
+    "--ladder" -> Mode("graft-scale-ladder",
+      (s, sf, a) => runLadder(s, sf, intAt(a, 0, 8), intAt(a, 1, 4)),
+      Map("spark.sql.ui.retainedExecutions" -> "50",
+        "spark.ui.retainedJobs" -> "100", "spark.ui.retainedStages" -> "100")))
+
+  /** The mode named by the first argument (none: the passage curve) and
+    * the arguments after it.
+    */
+  private def modeOf(args: Seq[String]): (Mode, Seq[String]) =
+    args.headOption.flatMap(modes.get) match {
+      case Some(m) => (m, args.drop(1))
+      case None => (modes(""), args)
+    }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--live")) return runLive(
-      args.lift(1).map(_.toInt).getOrElse(32),
-      args.lift(2).map(_.toInt).getOrElse(8))
-    if (args.headOption.contains("--hh")) return runHeavyHitters(
-      args.lift(1).map(_.toInt).getOrElse(32),
-      args.lift(2).map(_.toInt).getOrElse(64))
-    if (args.headOption.contains("--quote")) return runQuotation(
-      if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 8, 16))
-    if (args.headOption.contains("--novelty")) return runNovelty(
-      if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 8, 16))
-    if (args.headOption.contains("--health")) return runHealth(
-      if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 8, 16))
-    if (args.headOption.contains("--qlive")) return runQuotationLive(
-      args.lift(1).map(_.toInt).getOrElse(24),
-      args.lift(2).map(_.toInt).getOrElse(6))
-    if (args.headOption.contains("--maintain")) return runMaintain(
-      args.lift(1).map(_.toInt).getOrElse(5),
-      args.lift(2).map(_.toInt).getOrElse(2))
-    if (args.headOption.contains("--maintain-bpe")) return runMaintainBpe(
-      args.lift(1).map(_.toInt).getOrElse(5),
-      args.lift(2).map(_.toInt).getOrElse(2),
-      args.lift(3).map(_.toInt).getOrElse(1024))
-    if (args.headOption.contains("--span-bytes")) return runSpanBytes(
-      args.lift(1).map(_.toInt).getOrElse(8))
-    if (args.headOption.contains("--ladder")) return runLadder(
-      args.lift(1).map(_.toInt).getOrElse(8),
-      args.lift(2).map(_.toInt).getOrElse(4))
-    val epochCounts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 8, 16)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scale-stream")
-    import spark.implicits._
+    val (mode, rest) = modeOf(args.toSeq)
+    Rehearsal.run(mode.app, mode.conf)(mode.body(_, Rehearsal.sfDir, rest))
+  }
 
+  /** Run a mode on the caller's session, against `sfDir`. */
+  def rehearse(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
+    val (mode, rest) = modeOf(args)
+    mode.body(spark, sfDir, rest)
+  }
+
+  /** The fixed-batch / growing-epoch-index curve shared by the passage,
+    * `--quote`, `--novelty` and `--health` modes. Epoch content is
+    * DECORRELATED (per-epoch token suffix): each epoch contributes fresh
+    * n-grams and passages, so the index grows E× while the probe batch —
+    * a re-crawled 10% slice of epoch 0's content (it must die against
+    * epoch 0, whatever E is) plus a 10% slice of genuinely fresh content
+    * (it must survive) — gets an E-invariant result by construction: the
+    * built-in correctness face, covering both fates.
+    *
+    * Per epoch count E: build the E-epoch index (`register` per epoch),
+    * probe it with the live per-epoch partitions (chain length = E),
+    * REQUIRE the result equals the curve's first, fold the chain to ≤ 2
+    * partitions with the mode's `compact`, re-probe, REQUIRE the same
+    * result again, print. The pair shows both that the chained probe
+    * does not degrade with E and what compaction buys back when E gets
+    * long. The cached index is valid only while it still holds the LIVE
+    * E-epoch chain: the compaction MUTATES it, so a rerun that trusted
+    * the marker alone would measure the "live chain" probe against an
+    * already-compacted index — it is rebuilt whenever its partition
+    * count no longer matches E.
+    */
+  private def epochCurve[T](spark: SparkSession, sfDir: String,
+      index: String, epochCounts: Seq[Int], drifted: String,
+      compacted: String, sources: Boolean = false)(
+      register: (DataFrame, Long, String) => Unit,
+      probe: (DataFrame, String) => T,
+      compact: String => Unit,
+      fields: T => String,
+      verdict: (Int, T) => Unit = (_: Int, _: T) => ()): Unit = {
+    import spark.implicits._
     val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = base.count()
     require(nDocs > 0, s"no documents under $sfDir — nothing to rehearse")
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
-    val w = 8
-
-    // epoch e's corpus: replica of the base with an e-suffix on every
-    // token (e > 0), so passage universes are disjoint across epochs
-    def epochDocs(e: Int) = {
-      val text =
-        if (e == 0) $"text"
-        else array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ")
-      base.select(($"doc_id" + lit(e * stride)).as("doc_id"), text.as("text"))
-    }
-    // fixed probe batch: a re-crawled 10% slice of epoch 0's content
-    // (every passage must die against epoch 0, whatever E is) plus a
-    // 10% slice of genuinely fresh content (must survive) — so the
-    // E-invariance check covers both fates
-    val batch = base.where($"doc_id" % 10 === 0)
-      .select(($"doc_id" + lit(1000L * stride)).as("doc_id"), $"text")
-      .unionByName(base.where($"doc_id" % 10 === 5)
+    val stride = Rehearsal.stride(base, "doc_id")
+    def epochDocs(e: Int) = base.select(
+      ($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
+      (if (e == 0) $"text" else Rehearsal.suffixed($"text", "e" + e)).as("text"))
+    def named(df: DataFrame, source: String) =
+      if (sources) df.withColumn("source", lit(source)) else df
+    val batch = named(base.where($"doc_id" % 10 === 0)
+        .select(($"doc_id" + lit(1000L * stride)).as("doc_id"), $"text"),
+        "recrawl")
+      .unionByName(named(base.where($"doc_id" % 10 === 5)
         .select(($"doc_id" + lit(1001L * stride)).as("doc_id"),
-          array_join(transform(TextAnalysis.tokens($"text"),
-            x => concat(x, lit("fresh"))), " ").as("text")))
-
-    var expect = (-1L, -1L)
+          Rehearsal.suffixed($"text", "fresh").as("text")), "fresh"))
+    val expect = Rehearsal.same[T](drifted)
     epochCounts.foreach { ec =>
-      val idxPath = s"/tmp/graft-scale-streamidx-$ec"
-      // the cached dir is only valid if it still holds the LIVE
-      // E-epoch chain: the compaction below MUTATES it (merging down
-      // to <= 2 partitions), so a rerun that trusted the _OK marker
-      // alone would measure the "live chain" probe against an
-      // already-compacted index — rebuild whenever the partition
-      // count no longer matches the requested epoch count
-      val cachedParts = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      if (!new java.io.File(s"$idxPath/_OK").exists() || cachedParts != ec) {
-        val root = new org.apache.hadoop.fs.Path(idxPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) fs.delete(root, true): Unit
-        (0 until ec).foreach { e =>
-          Dedup.writeBucketedIndex(
-            Dedup.passages(epochDocs(e), "doc_id", "text", w)
-              .select($"chunk_text").distinct(),
-            s"$idxPath/epoch=$e", Seq("chunk_text"), 32)
-        }
-        new java.io.File(s"$idxPath/_OK").createNewFile(): Unit
+      val idx = Rehearsal.cached(s"graft-scale-$index-$ec", sfDir,
+          Rehearsal.chainLength(_) == ec) { p =>
+        (0 until ec).foreach(e => register(epochDocs(e), e.toLong, p))
       }
-      def probe(): (Double, Long, Long) = {
-        val parts = Streams.indexPartsBefore(spark, idxPath, Long.MaxValue)
-        val t0 = System.nanoTime()
-        val r = Dedup.incrementalPassageDedup(batch, parts, "doc_id", "text", w)
+      val (sec, live) = Rehearsal.timed(probe(batch, idx))
+      expect(ec, live)
+      verdict(ec, live)
+      compact(idx)
+      val (cSec, folded) = Rehearsal.timed(probe(batch, idx))
+      expect(ec, folded, s"compaction changed the $compacted at")
+      println(f"""{"epochs":$ec,"docs_indexed":${nDocs * ec},""" +
+        f""""probe_sec":$sec%.2f,"post_compact_sec":$cSec%.2f,""" +
+        f""""post_compact_parts":${Rehearsal.chainLength(idx)},${fields(live)}}""")
+    }
+  }
+
+  /** The passage-dedup epoch index ([[Streams.passageDedupStream]]'s
+    * layout): suppression (kept, dropped) of the probe batch.
+    */
+  private def runPassage(spark: SparkSession, sfDir: String,
+      epochCounts: Seq[Int]): Unit = {
+    import spark.implicits._
+    val w = 8
+    epochCurve[(Long, Long)](spark, sfDir, "streamidx", epochCounts,
+      "suppression drifted with epoch count", "probe result")(
+      register = (docs, e, idx) => Dedup.writeBucketedIndex(
+        Dedup.passages(docs, "doc_id", "text", w).select($"chunk_text").distinct(),
+        s"$idx/epoch=$e", Seq("chunk_text"), 32),
+      probe = (batch, idx) => {
+        val r = Dedup.incrementalPassageDedup(batch,
+            Streams.indexPartsBefore(spark, idx, Long.MaxValue), "doc_id", "text", w)
           .agg(coalesce(sum($"n_kept"), lit(0L)),
             coalesce(sum($"n_dropped"), lit(0L))).head()
-        val sec = (System.nanoTime() - t0) / 1e9
+        (r.getLong(0), r.getLong(1))
+      },
+      compact = Streams.compactPassageIndex(spark, _, upToEpoch = Long.MaxValue),
+      fields = { case (kept, dropped) => s""""kept":$kept,"dropped":$dropped""" })
+  }
+
+  /** `--quote`: the committed shingle-set index
+    * ([[Streams.quotationFlagStream]]'s layout). The probe batch quotes
+    * only epoch-0 content plus a fresh slice, so its flag count is
+    * E-invariant, and the probe's wall time must stay flat as E grows,
+    * because each committed epoch is a bucketed posting table the batch
+    * equi-joins WITHOUT re-exploding anything committed (the first-cut
+    * design re-exploded every committed hash array per batch: O(corpus)
+    * per epoch, exactly what this curve would have exposed). The r14
+    * compaction face folds the chain — the same container set, one
+    * candidates+verify leg instead of E of them.
+    */
+  private def runQuotation(spark: SparkSession, sfDir: String,
+      epochCounts: Seq[Int]): Unit =
+    epochCurve[Long](spark, sfDir, "quoteidx", epochCounts,
+      "flag count drifted with epoch count", "probe result")(
+      register = (docs, e, idx) => {
+        Streams.registerQuotationEpoch(docs, e, idx, "doc_id", "text",
+          n = 3, nBuckets = 32)
         Staged.releaseAll()
-        (sec, r.getLong(0), r.getLong(1))
-      }
-      val (liveSec, liveKept, liveDropped) = probe()
-      // correctness face: suppression is E-invariant by construction
-      if (expect._1 < 0) expect = (liveKept, liveDropped)
-      require((liveKept, liveDropped) == expect,
-        s"suppression drifted with epoch count $ec: ($liveKept,$liveDropped) != $expect")
-      Streams.compactPassageIndex(spark, idxPath, upToEpoch = Long.MaxValue)
-      val (compactSec, cKept, cDropped) = probe()
-      require((cKept, cDropped) == expect,
-        s"compaction changed the probe result at $ec: ($cKept,$cDropped) != $expect")
-      val nLive = Streams.indexPartsBefore(spark, idxPath, Long.MaxValue).size
-      println(f"""{"epochs":$ec,"docs_indexed":${nDocs * ec},""" +
-        f""""probe_sec":$liveSec%.2f,"post_compact_sec":$compactSec%.2f,""" +
-        f""""post_compact_parts":$nLive,"kept":$liveKept,"dropped":$liveDropped}""")
-    }
-    spark.stop()
+      },
+      probe = (batch, idx) => Streams.quotationFlags(batch, Long.MaxValue, idx,
+        "doc_id", "text", n = 3, threshold = 0.6).count(),
+      compact = Streams.compactQuotationIndex(spark, _, upToEpoch = Long.MaxValue),
+      fields = flags => s""""flags":$flags""")
+
+  /** One novelty probe epoch against the first-seen gram index at `idx`
+    * (its snapshots go next to it): the batch's (grams, novel) counts.
+    * The probe's registration is deleted afterwards, so the index keeps
+    * exactly its committed partitions.
+    */
+  private def noveltyProbe(spark: SparkSession, batch: DataFrame,
+      idx: String): (Long, Long) = {
+    import spark.implicits._
+    val probeEpoch = 1000000L
+    Streams.processNoveltyBatch(batch, probeEpoch, idx, s"$idx.out",
+      "doc_id", "text", n = 3, alertBelow = 0.0, maxChain = 0)
+    val r = spark.read.parquet(s"$idx.out/epoch=$probeEpoch")
+      .select($"n_grams", $"n_novel").as[(Long, Long)].head()
+    Rehearsal.rmrf(s"$idx/epoch=$probeEpoch")
+    spark.sql("DROP TABLE IF EXISTS " +
+      Dedup.indexTableName(s"$idx/epoch=$probeEpoch")): Unit
+    r
   }
 
-  /** Fixed quotation-probe batch vs a GROWING committed shingle-set
-    * index ([[Streams.quotationFlagStream]]'s layout): epoch shingle
-    * universes are disjoint (per-epoch token suffix), the probe batch
-    * quotes only epoch-0 content plus a fresh slice, so its flag count
-    * is E-invariant by construction — the correctness face — and the
-    * probe's wall time must stay flat as E grows, because each
-    * committed epoch is a bucketed posting table the batch equi-joins
-    * WITHOUT re-exploding anything committed (the first-cut design
-    * re-exploded every committed hash array per batch: O(corpus) per
-    * epoch, exactly what this curve would have exposed).
-    */
-  private def runQuotation(epochCounts: Seq[Int]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-quote")
-    import spark.implicits._
-    val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
-    val nDocs = base.count()
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
-    def epochDocs(e: Int) = {
-      val text =
-        if (e == 0) $"text"
-        else array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ")
-      base.select(($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
-        text.as("text"))
-    }
-    // probe: 10% of epoch-0 re-crawled verbatim (containment 1.0 in
-    // epoch 0, whatever E is) + 10% fresh (no flags ever)
-    val batch = base.where($"doc_id" % 10 === 0)
-      .select(($"doc_id" + lit(1000L * stride)).as("doc_id"), $"text")
-      .unionByName(base.where($"doc_id" % 10 === 5)
-        .select(($"doc_id" + lit(1001L * stride)).as("doc_id"),
-          array_join(transform(TextAnalysis.tokens($"text"),
-            x => concat(x, lit("fresh"))), " ").as("text")))
-    var expect = -1L
-    epochCounts.foreach { ec =>
-      val idxPath = s"/tmp/graft-scale-quoteidx-$ec"
-      // rebuild when the cached dir no longer holds the LIVE ec-epoch
-      // chain — the compaction below MUTATES it (the passage
-      // rehearsal's rule), so a rerun trusting _OK alone would measure
-      // the "live chain" probe against an already-compacted index
-      val cachedParts = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      if (!new java.io.File(s"$idxPath/_OK").exists() || cachedParts != ec) {
-        val root = new org.apache.hadoop.fs.Path(idxPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) fs.delete(root, true): Unit
-        (0 until ec).foreach { e =>
-          Streams.registerQuotationEpoch(epochDocs(e), e.toLong, idxPath,
-            "doc_id", "text", n = 3, nBuckets = 32)
-          Staged.releaseAll()
-        }
-        new java.io.File(s"$idxPath/_OK").createNewFile(): Unit
-      }
-      def probe(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val flags = Streams.quotationFlags(batch, Long.MaxValue, idxPath,
-          "doc_id", "text", n = 3, threshold = 0.6).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Staged.releaseAll()
-        (sec, flags)
-      }
-      val (sec, flags) = probe()
-      if (expect < 0) expect = flags
-      require(flags == expect,
-        s"flag count drifted with epoch count $ec: $flags != $expect")
-      // the r14 compaction face: fold the chain to <= 2 partitions and
-      // re-probe — the flag set must be invariant (same container set,
-      // one candidates+verify leg instead of ec of them)
-      Streams.compactQuotationIndex(spark, idxPath, upToEpoch = Long.MaxValue)
-      val (cSec, cFlags) = probe()
-      require(cFlags == expect,
-        s"compaction changed the probe result at $ec: $cFlags != $expect")
-      val nLive = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      println(f"""{"epochs":$ec,"docs_indexed":${nDocs * ec},""" +
-        f""""probe_sec":$sec%.2f,"post_compact_sec":$cSec%.2f,""" +
-        f""""post_compact_parts":$nLive,"flags":$flags}""")
-    }
-    spark.stop()
-  }
+  private def noveltyEpoch(docs: DataFrame, e: Long, idx: String): Unit =
+    Streams.processNoveltyBatch(docs, e, idx, s"$idx.out", "doc_id", "text",
+      n = 3, alertBelow = 0.0, maxChain = 0)
 
-  /** Fixed novelty-probe batch vs a GROWING first-seen gram index
-    * ([[Streams.noveltyMonitorStream]]'s layout): epoch gram universes
-    * are disjoint (per-epoch token suffix), the probe batch re-crawls
-    * only epoch-0 content plus a fresh slice, so its (grams, novel)
-    * counts are E-invariant by construction — the correctness face —
-    * and the per-batch cost curve shows what the chained anti-join fold
-    * costs as E grows LIVE vs after [[Streams.compactNoveltyIndex]]
-    * folds the chain to ≤ 2 partitions (the r14 compaction face: the
-    * residual growth is CHAIN length, and compaction removes it).
-    * Timed work is the full [[Streams.processNoveltyBatch]] — probe +
-    * snapshot write + registration — i.e. the real per-epoch bill.
+  /** `--novelty`: the first-seen gram index
+    * ([[Streams.noveltyMonitorStream]]'s layout). The curve shows what
+    * the chained anti-join fold costs as E grows LIVE vs after
+    * [[Streams.compactNoveltyIndex]] (the residual growth is CHAIN
+    * length, and compaction removes it). Timed work is the full
+    * [[Streams.processNoveltyBatch]] — probe + snapshot write +
+    * registration — i.e. the real per-epoch bill.
     */
-  private def runNovelty(epochCounts: Seq[Int]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-novelty")
-    import spark.implicits._
-    val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
-    val nDocs = base.count()
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
-    def epochDocs(e: Int) = {
-      val text =
-        if (e == 0) $"text"
-        else array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ")
-      base.select(($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
-        text.as("text"))
-    }
-    val batch = base.where($"doc_id" % 10 === 0)
-      .select(($"doc_id" + lit(1000L * stride)).as("doc_id"), $"text")
-      .unionByName(base.where($"doc_id" % 10 === 5)
-        .select(($"doc_id" + lit(1001L * stride)).as("doc_id"),
-          array_join(transform(TextAnalysis.tokens($"text"),
-            x => concat(x, lit("fresh"))), " ").as("text")))
-    var expect = (-1L, -1L)
-    epochCounts.foreach { ec =>
-      val idxPath = s"/tmp/graft-scale-novidx-$ec"
-      val outPath = s"/tmp/graft-scale-novout-$ec"
-      val cachedParts = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      if (!new java.io.File(s"$idxPath/_OK").exists() || cachedParts != ec) {
-        val root = new org.apache.hadoop.fs.Path(idxPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) fs.delete(root, true): Unit
-        (0 until ec).foreach { e =>
-          Streams.processNoveltyBatch(epochDocs(e), e.toLong, idxPath,
-            outPath, "doc_id", "text", n = 3, alertBelow = 0.0,
-            maxChain = 0)
-        }
-        new java.io.File(s"$idxPath/_OK").createNewFile(): Unit
-      }
-      // measure one probe epoch, then DELETE its registration so the
-      // cached index keeps exactly ec committed partitions
-      def probe(): (Double, Long, Long) = {
-        val probeEpoch = 1000000L
-        val t0 = System.nanoTime()
-        Streams.processNoveltyBatch(batch, probeEpoch, idxPath, outPath,
-          "doc_id", "text", n = 3, alertBelow = 0.0, maxChain = 0)
-        val sec = (System.nanoTime() - t0) / 1e9
-        val r = spark.read.parquet(s"$outPath/epoch=$probeEpoch")
-          .select($"n_grams", $"n_novel").as[(Long, Long)].head()
-        val fs = new org.apache.hadoop.fs.Path(idxPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$idxPath/epoch=$probeEpoch"), true): Unit
-        spark.sql("DROP TABLE IF EXISTS " + graft.ops.Dedup
-          .indexTableName(s"$idxPath/epoch=$probeEpoch")): Unit
-        (sec, r._1, r._2)
-      }
-      val (sec, nGrams, nNovel) = probe()
-      if (expect._1 < 0) expect = (nGrams, nNovel)
-      require((nGrams, nNovel) == expect,
-        s"novelty drifted with epoch count $ec: ($nGrams,$nNovel) != $expect")
-      Streams.compactNoveltyIndex(spark, idxPath, upToEpoch = Long.MaxValue)
-      val (cSec, cGrams, cNovel) = probe()
-      require((cGrams, cNovel) == expect,
-        s"compaction changed the probe result at $ec: ($cGrams,$cNovel) != $expect")
-      val nLive = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      println(f"""{"epochs":$ec,"docs_indexed":${nDocs * ec},""" +
-        f""""probe_sec":$sec%.2f,"post_compact_sec":$cSec%.2f,""" +
-        f""""post_compact_parts":$nLive,"grams":$nGrams,"novel":$nNovel}""")
-    }
-    spark.stop()
-  }
+  private def runNovelty(spark: SparkSession, sfDir: String,
+      epochCounts: Seq[Int]): Unit =
+    epochCurve[(Long, Long)](spark, sfDir, "novidx", epochCounts,
+      "novelty drifted with epoch count", "probe result")(
+      register = noveltyEpoch,
+      probe = noveltyProbe(spark, _, _),
+      compact = Streams.compactNoveltyIndex(spark, _, upToEpoch = Long.MaxValue),
+      fields = { case (grams, novel) => s""""grams":$grams,"novel":$novel""" })
 
-  /** `--health`: [[Streams.sourceHealthSnapshot]]'s read path against a
-    * GROWING epoch-partitioned gram index — the novelty curve's
-    * question asked of the per-source monitor, which reads EVERY
-    * committed gram partition per epoch (one anti-join leg each, the
-    * chained Exchange-free probe): the per-source verdicts must be
-    * E-invariant (the re-crawl source reads novelty 0, the fresh
-    * source high, at every E) while probe time must stay flat in E and
-    * drop to the ≤2-partition cost after [[Streams.compactNoveltyIndex]]
-    * — the same compaction the index OWNER (the novelty stream) runs
-    * under `maxChain`, so a health monitor pointed at a live novelty
-    * index inherits bounded chains for free.
+  /** `--health`: [[Streams.sourceHealthSnapshot]]'s read path against
+    * the novelty index — the novelty curve's question asked of the
+    * per-source monitor, which reads EVERY committed gram partition per
+    * epoch (one anti-join leg each): the per-source verdicts must be
+    * E-invariant (the re-crawl source reads novelty 0, the fresh source
+    * high, at every E) while probe time must stay flat in E and drop to
+    * the ≤2-partition cost after [[Streams.compactNoveltyIndex]] — the
+    * same compaction the index OWNER (the novelty stream) runs under
+    * `maxChain`, so a health monitor pointed at a live novelty index
+    * inherits bounded chains for free.
     */
-  private def runHealth(epochCounts: Seq[Int]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-health")
+  private def runHealth(spark: SparkSession, sfDir: String,
+      epochCounts: Seq[Int]): Unit = {
     import spark.implicits._
-    val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
-    val nDocs = base.count()
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
-    def epochDocs(e: Int) = {
-      val text =
-        if (e == 0) $"text"
-        else array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ")
-      base.select(($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
-        text.as("text"))
-    }
     // frozen day-1 vocab + merge list, built once per sf fixture
-    val artPath = "/tmp/graft-scale-health-art"
-    if (!new java.io.File(s"$artPath/_OK").exists()) {
+    val art = Rehearsal.cached("graft-scale-health-art", sfDir) { p =>
+      val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
       TextAnalysis.fitVocab(base, "text", vocabSize = 200)
-        .write.mode("overwrite").parquet(s"$artPath/vocab")
+        .write.mode("overwrite").parquet(s"$p/vocab")
       graft.ops.Bpe.fitAuto(base, "text", nMerges = 16)
-        .mergeTable(spark).write.mode("overwrite")
-        .parquet(s"$artPath/merges")
+        .mergeTable(spark).write.mode("overwrite").parquet(s"$p/merges")
       Staged.releaseAll()
-      new java.io.File(s"$artPath/_OK").createNewFile(): Unit
     }
-    // the probe batch names its sources: a re-crawl slice of epoch 0's
-    // content (novelty must read 0 whatever E is) and a fresh slice
-    // (must read novel) — the per-source E-invariance is the
-    // correctness face of the curve
-    val batch = base.where($"doc_id" % 10 === 0)
-      .select(($"doc_id" + lit(1000L * stride)).as("doc_id"), $"text",
-        lit("recrawl").as("source"))
-      .unionByName(base.where($"doc_id" % 10 === 5)
-        .select(($"doc_id" + lit(1001L * stride)).as("doc_id"),
-          array_join(transform(TextAnalysis.tokens($"text"),
-            x => concat(x, lit("fresh"))), " ").as("text"),
-          lit("fresh").as("source")))
-    var expect: Map[String, (Double, Double, Double)] = null
-    epochCounts.foreach { ec =>
-      val idxPath = s"/tmp/graft-scale-healthidx-$ec"
-      val outPath = s"/tmp/graft-scale-healthout-$ec"
-      val cachedParts = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      if (!new java.io.File(s"$idxPath/_OK").exists() || cachedParts != ec) {
-        val root = new org.apache.hadoop.fs.Path(idxPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) fs.delete(root, true): Unit
-        (0 until ec).foreach { e =>
-          Streams.processNoveltyBatch(epochDocs(e), e.toLong, idxPath,
-            outPath, "doc_id", "text", n = 3, alertBelow = 0.0,
-            maxChain = 0)
-        }
-        new java.io.File(s"$idxPath/_OK").createNewFile(): Unit
-      }
-      def probe(): (Double, Map[String, (Double, Double, Double)]) = {
-        val t0 = System.nanoTime()
-        val rows = Streams.sourceHealthSnapshot(batch, idxPath,
-            s"$artPath/vocab", s"$artPath/merges", "text", "source")
-          .select($"source", $"novelty", $"oov_rate", $"fertility")
-          .as[(String, Double, Double, Double)].collect()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Staged.releaseAll()
-        (sec, rows.map(r => r._1 -> ((r._2, r._3, r._4))).toMap)
-      }
-      val (sec, health) = probe()
-      if (expect == null) expect = health
-      require(health == expect,
-        s"per-source health drifted with epoch count $ec: $health != $expect")
-      require(health("recrawl")._1 == 0.0 && health("fresh")._1 > 0.5,
-        s"source verdicts must name the re-crawler at E=$ec: $health")
-      Streams.compactNoveltyIndex(spark, idxPath, upToEpoch = Long.MaxValue)
-      val (cSec, cHealth) = probe()
-      require(cHealth == expect,
-        s"compaction changed the verdicts at $ec: $cHealth != $expect")
-      val nLive = Option(new java.io.File(idxPath).listFiles()).toSeq
-        .flatten.count(_.getName.startsWith("epoch="))
-      println(f"""{"epochs":$ec,"docs_indexed":${nDocs * ec},""" +
-        f""""probe_sec":$sec%.2f,"post_compact_sec":$cSec%.2f,""" +
-        f""""post_compact_parts":$nLive,""" +
-        f""""recrawl_novelty":${expect("recrawl")._1}%.6f,""" +
-        f""""fresh_novelty":${expect("fresh")._1}%.6f}""")
-    }
-    spark.stop()
+    epochCurve[Map[String, (Double, Double, Double)]](spark, sfDir,
+      "healthidx", epochCounts, "per-source health drifted with epoch count",
+      "verdicts", sources = true)(
+      register = noveltyEpoch,
+      probe = (batch, idx) => Streams.sourceHealthSnapshot(batch, idx,
+          s"$art/vocab", s"$art/merges", "text", "source")
+        .select($"source", $"novelty", $"oov_rate", $"fertility")
+        .as[(String, Double, Double, Double)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap,
+      compact = Streams.compactNoveltyIndex(spark, _, upToEpoch = Long.MaxValue),
+      fields = h => f""""recrawl_novelty":${h("recrawl")._1}%.6f,""" +
+        f""""fresh_novelty":${h("fresh")._1}%.6f""",
+      verdict = (ec, health) =>
+        require(health("recrawl")._1 == 0.0 && health("fresh")._1 > 0.5,
+          s"source verdicts must name the re-crawler at E=$ec: $health"))
   }
-
-  private case class Vec(vec_id: Long, embedding: Seq[Float])
 
   /** `--maintain [nEpochs] [debounce]` (default 5, 2): price the
     * STREAMING refit-maintenance loop end to end at the fixture scale —
@@ -428,30 +293,29 @@ object ScaleRehearsalStream {
     * clear the drifted value by the refit-spec differential (all
     * REQUIREd, not just printed).
     */
-  private def runMaintain(nEpochs: Int, debounce: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-maintain")
+  private def runMaintain(spark: SparkSession, sfDir: String, nEpochs: Int,
+      debounce: Int): Unit = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings").select($"vec_id", $"embedding")
     val nBase = emb.count()
     require(nBase > 0, s"no embeddings under $sfDir — nothing to rehearse")
     val root = java.nio.file.Files.createTempDirectory("graft-maintain").toString
     val dir = s"$root/index"
-    var t0 = System.nanoTime()
-    graft.ops.Ivf.buildPersistent(emb, dir, "vec_id", "embedding", k = 16): Unit
-    graft.ops.Pq.pqAssign(spark, dir, "vec_id", "embedding", m = 4, ksub = 16)
-    // the drift: a far offset blob with REAL angular spread (5x the
-    // base variation riding a +15-per-coordinate offset) — far enough
-    // that the frozen codebooks saturate on its residuals, spread
-    // enough that round-6 cosine still ranks its members distinctly (a
-    // tighter blob collapses to ties and reads a vacuous 1.0
-    // agreement). The IvfRefitSpec recipe at fixture scale.
-    graft.ops.Ivf.appendToIndex(
-      emb.select(($"vec_id" + 10000000L).as("vec_id"),
-        transform($"embedding", x => x * lit(5.0f) + lit(10.0f))
-          .as("embedding")),
-      dir, "vec_id", "embedding"): Unit
-    val day1Sec = (System.nanoTime() - t0) / 1e9
+    val (day1Sec, _) = Rehearsal.timed {
+      graft.ops.Ivf.buildPersistent(emb, dir, "vec_id", "embedding", k = 16): Unit
+      graft.ops.Pq.pqAssign(spark, dir, "vec_id", "embedding", m = 4, ksub = 16)
+      // the drift: a far offset blob with REAL angular spread (5x the
+      // base variation riding a +15-per-coordinate offset) — far enough
+      // that the frozen codebooks saturate on its residuals, spread
+      // enough that round-6 cosine still ranks its members distinctly (a
+      // tighter blob collapses to ties and reads a vacuous 1.0
+      // agreement). The IvfRefitSpec recipe at fixture scale.
+      graft.ops.Ivf.appendToIndex(
+        emb.select(($"vec_id" + 10000000L).as("vec_id"),
+          transform($"embedding", x => x * lit(5.0f) + lit(10.0f))
+            .as("embedding")),
+        dir, "vec_id", "embedding"): Unit
+    }
     // drifted maintenance queries (the snapshot samples the lowest 32):
     // the arriving drifted traffic is what the degraded codes mis-rank,
     // so it is what the gate measures — the r17 loop spec's recipe
@@ -484,12 +348,10 @@ object ScaleRehearsalStream {
     var repairWall = -1.0
     try {
       (0 until nEpochs).foreach { e =>
-        var t = System.nanoTime()
-        maintIn.addData(maintBatch: _*); maintQ.processAllAvailable()
-        val maintSec = (System.nanoTime() - t) / 1e9
-        t = System.nanoTime()
-        serveIn.addData(serveBatch: _*); serveQ.processAllAvailable()
-        val serveSec = (System.nanoTime() - t) / 1e9
+        val (maintSec, _) = Rehearsal.timed {
+          maintIn.addData(maintBatch: _*); maintQ.processAllAvailable() }
+        val (serveSec, _) = Rehearsal.timed {
+          serveIn.addData(serveBatch: _*); serveQ.processAllAvailable() }
         val (agree, alert) = spark.read.parquet(s"$mon/epoch=$e")
           .select($"staged_agreement", $"alert").as[(Double, Boolean)].head()
         val repaired = new java.io.File(s"$ref/epoch=$e").exists()
@@ -532,7 +394,6 @@ object ScaleRehearsalStream {
       f""""epochs_to_repair":$debounce,"repair_wall_sec":$repairWall%.1f,""" +
       f""""agreement_before":$agreeBefore%.6f,"agreement_after":$agreeAfter%.6f,""" +
       f""""serve_epochs_ok":$nEpochs}""")
-    spark.stop()
   }
 
   /** `--ladder [nDays] [maxChain]` (default 8, 4): price the rolling
@@ -559,33 +420,17 @@ object ScaleRehearsalStream {
     * for: a probe or registration whose cost reads the CORPUS or the
     * chain length — at 8 days that reads ≥ 2× and climbing.
     */
-  private def runLadder(nDays: Int, maxChain: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.builder("graft-scale-ladder")
-      .master(s"local[${GraftSession.cpus}]")
-      // one JVM hosts 2·nDays day-jobs back to back (production runs
-      // one driver per day): without a bound the SQL status store
-      // retains 1000 executions' plan metrics/descriptions (~1M
-      // SQLPlanMetric instances, GBs, measured by heap histogram at
-      // day 6) — an artifact of the REHEARSAL shape, capped here so
-      // the per-day heap_mb column reads the engine, not the UI store
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def runLadder(spark: SparkSession, sfDir: String, nDays: Int,
+      maxChain: Int): Unit = {
     require(nDays >= 4, s"the flatness gate needs >= 4 days, got $nDays")
     val work = java.nio.file.Files
       .createTempDirectory("graft-ladder").toString
-    def chainOf(idx: String): Int = Option(
-      new java.io.File(s"$work/$idx").listFiles()).toSeq.flatten
-      .count(_.getName.startsWith("epoch="))
+    def chainOf(idx: String): Int = Rehearsal.chainLength(s"$work/$idx")
     val coldWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     (2 to nDays + 1).foreach { day =>
-      var t0 = System.nanoTime()
-      val s = graft.CurateMain.ingestDay(spark, sfDir, work, day,
-        maxChain = maxChain)
-      val coldSec = (System.nanoTime() - t0) / 1e9
+      def ingest() = Rehearsal.timed(graft.CurateMain.ingestDay(spark,
+        sfDir, work, day, maxChain = maxChain))
+      val (coldSec, s) = ingest()
       // the suppression ladder must ACT every day: exact re-crawls die
       // at the passage probe, near re-crawls at the LSH probe, quoted
       // spans strip (some quote docs drop to the short-remainder rule)
@@ -598,10 +443,7 @@ object ScaleRehearsalStream {
         s"day $day chain escaped the bound: span=$spanChain " +
           s"passage=$pasChain > ${maxChain + 1}")
       // head-day warm replay: byte-identical summary before advancing
-      t0 = System.nanoTime()
-      val s2 = graft.CurateMain.ingestDay(spark, sfDir, work, day,
-        maxChain = maxChain)
-      val warmSec = (System.nanoTime() - t0) / 1e9
+      val (warmSec, s2) = ingest()
       require(s2 == s, s"day $day warm replay drifted: $s2 vs $s")
       // post-GC driver heap per day: the boundedness evidence for the
       // one axis the wall clock can't see (a slow driver-side leak
@@ -620,7 +462,7 @@ object ScaleRehearsalStream {
       // also drop anything that escaped Staged tracking (CacheManager
       // entries, lingering listing caches) or the LADDER's own heap —
       // not the engine's — trends with day number
-      graft.ops.Staged.releaseAll()
+      Staged.releaseAll()
       spark.catalog.clearCache()
     }
     // the flatness gate: wall follows the batch, not the day number
@@ -634,62 +476,6 @@ object ScaleRehearsalStream {
       f""""first_half_mean_sec":$firstHalf%.1f,""" +
       f""""last_half_mean_sec":$lastHalf%.1f,""" +
       f""""trend_ratio":${lastHalf / firstHalf}%.2f}""")
-    spark.stop()
-  }
-
-  /** `--span-bytes [window]` (default 8): the r19 hash-keyed span
-    * index's storage differential, measured — build the PERSISTED
-    * span index over the corpus in BOTH keyings and report committed
-    * parquet bytes, bytes/span, and build wall. The transient probe's
-    * shuffle savings are the x98 plan pin's business; this prices the
-    * artifact that LIVES FOREVER, which at 100 TB is where the bytes
-    * bill. A differential probe REQUIREs the two layouts verdict
-    * identically on a fresh batch before the sizes are reported.
-    */
-  private def runSpanBytes(window: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-span-bytes")
-    import spark.implicits._
-    val docs = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
-    val corpus = docs.where($"doc_id" % 10 =!= 0)
-    val batch = docs.where($"doc_id" % 10 === 0)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-span-bytes").toString
-    def bytesUnder(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
-        else if (f.getName.endsWith(".parquet")) f.length()
-        else 0L
-      walk(new java.io.File(p))
-    }
-    val out = Seq(false, true).map { hashed =>
-      val dir = s"$root/${if (hashed) "hashed" else "text"}"
-      val t0 = System.nanoTime()
-      Dedup.writeSpanIndex(corpus, "doc_id", "text", window, dir,
-        hashed = hashed)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      val nSpans = Dedup.readIndexTable(spark, s"$dir/spans").count()
-      val bytes = bytesUnder(s"$dir/spans")
-      (hashed, nSpans, bytes, buildSec)
-    }
-    // the two layouts must VERDICT identically before sizes mean
-    // anything (no 64-bit collision at fixture scale)
-    def m(hashed: Boolean) = Dedup.incrementalSubstringDedup(batch,
-        s"$root/${if (hashed) "hashed" else "text"}", "doc_id", "text",
-        window, hashed = hashed)
-      .select($"doc_id", $"n_dropped", $"clean_text")
-      .as[(Long, Long, String)].collect().toSet
-    require(m(false) == m(true),
-      "the hashed index must verdict identically to the text-keyed one")
-    out.foreach { case (hashed, n, b, sec) =>
-      println(f"""{"keying":"${if (hashed) "hashed" else "text"}",""" +
-        f""""n_spans":$n,"bytes":$b,""" +
-        f""""bytes_per_span":${b.toDouble / n}%.2f,"build_sec":$sec%.1f}""")
-    }
-    val ratio = out(0)._3.toDouble / out(1)._3
-    println(f"""{"mode":"span-bytes","window":$window,""" +
-      f""""text_over_hashed_bytes":$ratio%.2f}""")
-    spark.stop()
   }
 
   /** `--maintain-bpe [nEpochs] [debounce] [nMerges]` (default 5, 2,
@@ -717,10 +503,8 @@ object ScaleRehearsalStream {
     * fertility clears the alert by a wide gap, and the consumer's
     * drifted-sample subword count shrinks across the swap.
     */
-  private def runMaintainBpe(nEpochs: Int, debounce: Int,
-      nMerges: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-maintain-bpe")
+  private def runMaintainBpe(spark: SparkSession, sfDir: String,
+      nEpochs: Int, debounce: Int, nMerges: Int): Unit = {
     import spark.implicits._
     val docsAll = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val nDocs = docsAll.count()
@@ -734,18 +518,15 @@ object ScaleRehearsalStream {
     val root = java.nio.file.Files
       .createTempDirectory("graft-maintain-bpe").toString
     val bpePath = s"$root/bpe"
-    var t0 = System.nanoTime()
-    graft.ops.Bpe.fitCached(base, "text", nMerges, bpePath,
-      corpusTag = "day1"): Unit
-    val day1FitSec = (System.nanoTime() - t0) / 1e9
+    val (day1FitSec, _) = Rehearsal.timed(graft.ops.Bpe.fitCached(base,
+      "text", nMerges, bpePath, corpusTag = "day1"))
     // the caller-maintained fit corpus the repair re-fits over: the
     // base plus the ABSORBED drifted ingest (re-fitting on one drifted
     // batch alone would whiplash the vocabulary — the stream scaladoc's
     // contract)
     val corpusPath = s"$root/fitcorpus"
-    t0 = System.nanoTime()
-    base.unionByName(drift).write.mode("overwrite").parquet(corpusPath)
-    val corpusWriteSec = (System.nanoTime() - t0) / 1e9
+    val (corpusWriteSec, _) = Rehearsal.timed(
+      base.unionByName(drift).write.mode("overwrite").parquet(corpusPath))
     val driftBatch = drift.orderBy($"doc_id").limit(512)
       .as[Doc].collect().toSeq
     val consumerSample = drift.orderBy($"doc_id").limit(64)
@@ -794,9 +575,8 @@ object ScaleRehearsalStream {
         // the repair fires inside the debounce-boundary epoch: flag the
         // window so overlapping reads are attributable to the swap
         if (e == debounce - 1) repairing.set(true)
-        val t = System.nanoTime()
-        input.addData(driftBatch: _*); q.processAllAvailable()
-        val maintSec = (System.nanoTime() - t) / 1e9
+        val (maintSec, _) = Rehearsal.timed {
+          input.addData(driftBatch: _*); q.processAllAvailable() }
         if (e == debounce - 1) repairing.set(false)
         val (fert, alert) = spark.read.parquet(s"$mon/epoch=$e")
           .select($"fertility", $"alert").as[(Double, Boolean)].head()
@@ -865,173 +645,142 @@ object ScaleRehearsalStream {
       f""""concurrent_reads":${reads.get()},""" +
       f""""reads_during_repair":${readsDuringRepair.get()},""" +
       f""""consumer_read_errors":${consumerErrors.size}}""")
-    spark.stop()
   }
 
-  /** Drive the REAL quotation-flag stream (MemoryStream →
-    * [[Streams.quotationFlagStream]]) `nEpochs` micro-batches under
-    * the r14 auto-compaction policy — the unattended-operation face of
-    * the `--quote` curve. Each epoch ingests a decorrelated fresh
-    * slice (new shingle universe) PLUS a verbatim re-crawl of the same
-    * epoch-0 slice under fresh ids, so every epoch ≥ 1 must flag
+  /** The live-stream curve shared by `--live`, `--qlive` and `--hh`:
+    * start the mode's REAL stream over a MemoryStream of docs (`start`
+    * gets the input and a fresh root dir), feed it `batchOf(e)` as
+    * micro-batch e, time each batch, and print its fields — `after`
+    * runs the mode's per-epoch REQUIREs and returns its extra fields.
+    */
+  private def liveCurve(spark: SparkSession, name: String, nEpochs: Int,
+      batchOf: Int => Seq[Doc])(start: (DataFrame, String) => StreamingQuery)(
+      after: (Int, String) => String): Unit = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory(name).toString
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Doc](spark)
+    val q = start(input.toDF(), root)
+    try {
+      (0 until nEpochs).foreach { e =>
+        val batch = batchOf(e)
+        val (sec, _) = Rehearsal.timed {
+          input.addData(batch: _*)
+          q.processAllAvailable()
+        }
+        println(f"""{"epoch":$e,"batch_docs":${batch.size},""" +
+          f""""batch_sec":$sec%.2f,${after(e, root)}}""")
+      }
+    } finally q.stop()
+  }
+
+  /** A decorrelated 10% corpus slice per epoch: epoch-suffixed tokens
+    * under epoch-strided ids, so every batch brings fresh content.
+    */
+  private def freshSlices(spark: SparkSession, sfDir: String): Int => Seq[Doc] = {
+    import spark.implicits._
+    val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
+      .where($"doc_id" % 10 === 0)
+    val stride = Rehearsal.stride(base, "doc_id")
+    e => base.select(($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
+        Rehearsal.suffixed($"text", "e" + e).as("text"))
+      .as[Doc].collect().toSeq
+  }
+
+  /** `--live [nEpochs] [maxChain]` (default 32, 8): drive the REAL
+    * passage-dedup stream — MemoryStream → [[Streams.passageDedupStream]]
+    * with its auto-compaction policy — one decorrelated slice per epoch
+    * (fresh passages every epoch — worst case for index growth), so
+    * without the policy the chain would reach `nEpochs`. The
+    * unattended-operation face: the on-disk chain must never exceed
+    * maxChain+1 and per-epoch cost must stay flat with ZERO manual
+    * compaction calls. Reported per epoch: batch wall time (probe +
+    * epoch writes + any auto-compaction) and the chain length the NEXT
+    * batch will probe.
+    */
+  private def runLive(spark: SparkSession, sfDir: String, nEpochs: Int,
+      maxChain: Int): Unit =
+    liveCurve(spark, "graft-live-stream", nEpochs, freshSlices(spark, sfDir))(
+      (in, root) => Streams.passageDedupStream(in, s"$root/index",
+        s"$root/out", s"$root/cp", "doc_id", "text", window = 8,
+        maxChain = maxChain)) { (e, root) =>
+      val c = Rehearsal.chainLength(s"$root/index")
+      require(c <= maxChain + 1,
+        s"auto-compaction failed to bound the chain: $c at epoch $e")
+      s""""chain_parts":$c"""
+    }
+
+  /** `--qlive [nEpochs] [maxChain]` (default 24, 6): drive the REAL
+    * quotation-flag stream (MemoryStream → [[Streams.quotationFlagStream]])
+    * under the r14 auto-compaction policy — the unattended-operation
+    * face of the `--quote` curve. Each epoch ingests a decorrelated
+    * fresh slice (new shingle universe) PLUS a verbatim re-crawl of the
+    * same epoch-0 slice under fresh ids, so every epoch ≥ 1 must flag
     * exactly that re-crawled slice against epoch 0's containers — a
     * per-epoch correctness invariant that crosses every compaction
     * boundary — while the on-disk chain must never exceed maxChain+1
     * with ZERO manual compaction calls.
     */
-  private def runQuotationLive(nEpochs: Int, maxChain: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-qlive")
+  private def runQuotationLive(spark: SparkSession, sfDir: String,
+      nEpochs: Int, maxChain: Int): Unit = {
     import spark.implicits._
-
     val docsAll = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
     val fresh = docsAll.where($"doc_id" % 10 === 0)
     val quoted = docsAll.where($"doc_id" % 50 === 5) // re-crawled every epoch
-    val stride = docsAll.agg(max($"doc_id")).head().getLong(0) + 1L
+    val stride = Rehearsal.stride(docsAll, "doc_id")
     // only docs with >= n tokens have shingles and can flag
     val nQuoted = quoted
       .where(size(TextAnalysis.tokens($"text")) >= 3).count()
+    // fresh content is token-suffixed (new shingle universe per epoch);
+    // epoch 0 ALSO carries the quoted slice VERBATIM at its original
+    // (< stride) ids — the containers every later epoch's re-crawl must
+    // flag against
     def epochBatch(e: Int): Seq[Doc] = {
-      // fresh content is token-suffixed (new shingle universe per
-      // epoch); epoch 0 ALSO carries the quoted slice VERBATIM at its
-      // original (< stride) ids — the containers every later epoch's
-      // re-crawl must flag against
       val f = fresh.select(($"doc_id" + lit(e.toLong * 2 * stride)).as("doc_id"),
-        array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ").as("text"))
+        Rehearsal.suffixed($"text", "e" + e).as("text"))
       val q =
         if (e == 0) quoted
         else quoted.select(
           ($"doc_id" + lit((e.toLong * 2 + 1) * stride)).as("doc_id"), $"text")
       f.unionByName(q).as[Doc].collect().toSeq
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-qlive").toString
-    val idxPath = s"$root/index"
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Doc](spark)
-    val q = Streams.quotationFlagStream(input.toDF(), idxPath, s"$root/out",
-      s"$root/cp", "doc_id", "text", n = 3, threshold = 0.6,
-      maxChain = maxChain)
-    def chain: Int = Option(new java.io.File(idxPath).listFiles()).toSeq
-      .flatten.count(_.getName.startsWith("epoch="))
-    try {
-      (0 until nEpochs).foreach { e =>
-        val batch = epochBatch(e)
-        val t0 = System.nanoTime()
-        input.addData(batch: _*)
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val c = chain
-        require(c <= maxChain + 1,
-          s"auto-compaction failed to bound the chain: $c at epoch $e")
-        // every epoch >= 1 must flag its whole re-crawled slice against
-        // the ORIGINAL epoch-0 docs (ids < stride), across any number
-        // of compactions of the containers' partition
-        if (e >= 1) {
-          val vsOriginal = spark.read.parquet(s"$root/out/epoch=$e")
-            .where(col("quoted_from") < stride)
-            .select(countDistinct(col("doc_id"))).head().getLong(0)
-          require(vsOriginal == nQuoted,
-            s"epoch $e flagged $vsOriginal of $nQuoted re-crawls vs epoch 0")
-        }
-        println(f"""{"epoch":$e,"batch_docs":${batch.size},""" +
-          f""""batch_sec":$sec%.2f,"chain_parts":$c}""")
+    liveCurve(spark, "graft-qlive", nEpochs, epochBatch)(
+      (in, root) => Streams.quotationFlagStream(in, s"$root/index",
+        s"$root/out", s"$root/cp", "doc_id", "text", n = 3, threshold = 0.6,
+        maxChain = maxChain)) { (e, root) =>
+      val c = Rehearsal.chainLength(s"$root/index")
+      require(c <= maxChain + 1,
+        s"auto-compaction failed to bound the chain: $c at epoch $e")
+      // every epoch >= 1 must flag its whole re-crawled slice against
+      // the ORIGINAL epoch-0 docs (ids < stride), across any number of
+      // compactions of the containers' partition
+      if (e >= 1) {
+        val vsOriginal = spark.read.parquet(s"$root/out/epoch=$e")
+          .where(col("quoted_from") < stride)
+          .select(countDistinct(col("doc_id"))).head().getLong(0)
+        require(vsOriginal == nQuoted,
+          s"epoch $e flagged $vsOriginal of $nQuoted re-crawls vs epoch 0")
       }
-    } finally q.stop()
-    spark.stop()
+      s""""chain_parts":$c"""
+    }
   }
 
-  /** Drive the real stream `nEpochs` micro-batches under the
-    * auto-compaction policy. Each epoch ingests a decorrelated 10%
-    * slice of the corpus (fresh passages every epoch — worst case for
-    * index growth), so without the policy the chain would reach
-    * `nEpochs`; with it the on-disk partition count must never exceed
-    * `maxChain + 1`. Reported per epoch: batch wall time (probe +
-    * epoch writes + any auto-compaction) and the chain length the NEXT
-    * batch will probe.
+  /** `--hh [nEpochs] [k]` (default 32, 64): drive
+    * [[Streams.heavyHittersStream]] over decorrelated slices (fresh
+    * vocabulary every batch — worst case for Misra-Gries churn: nothing
+    * repeats, every counter fights for its slot). The flat-cost claim:
+    * per-batch wall time must not trend with the number of epochs
+    * already ingested (chain state is ONE k-sized map), and every
+    * committed summary must respect capacity k.
     */
-  private def runLive(nEpochs: Int, maxChain: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // explicit type: the implicit SQLContext below otherwise drags this
-    // definition into its own inference cycle via spark.implicits._
-    val spark: SparkSession = GraftSession.local("graft-scale-stream-live")
-    import spark.implicits._
-
-    val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
-      .where($"doc_id" % 10 === 0)
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
-    def epochBatch(e: Int): Seq[Doc] =
-      base.select(($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
-        array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ").as("text"))
-        .as[Doc].collect().toSeq
-
-    val root = java.nio.file.Files.createTempDirectory("graft-live-stream").toString
-    val idxPath = s"$root/index"
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Doc](spark)
-    val q = Streams.passageDedupStream(input.toDF(), idxPath, s"$root/out",
-      s"$root/cp", "doc_id", "text", window = 8, maxChain = maxChain)
-    def chain: Int = Option(new java.io.File(idxPath).listFiles()).toSeq
-      .flatten.count(_.getName.startsWith("epoch="))
-    try {
-      (0 until nEpochs).foreach { e =>
-        val batch = epochBatch(e)
-        val t0 = System.nanoTime()
-        input.addData(batch: _*)
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val c = chain
-        require(c <= maxChain + 1,
-          s"auto-compaction failed to bound the chain: $c at epoch $e")
-        println(f"""{"epoch":$e,"batch_docs":${batch.size},""" +
-          f""""batch_sec":$sec%.2f,"chain_parts":$c}""")
-      }
-    } finally q.stop()
-    spark.stop()
-  }
-
-  /** Drive [[Streams.heavyHittersStream]] `nEpochs` micro-batches,
-    * each a decorrelated 10% corpus slice with epoch-suffixed tokens
-    * (fresh vocabulary every batch — worst case for Misra-Gries
-    * churn: nothing repeats, every counter fights for its slot).
-    * The flat-cost claim: per-batch wall time must not trend with the
-    * number of epochs already ingested (chain state is ONE k-sized
-    * map), and every committed summary must respect capacity k.
-    */
-  private def runHeavyHitters(nEpochs: Int, k: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-scale-stream-hh")
-    import spark.implicits._
-
-    val base = Tables(spark, sfDir, "documents").select($"doc_id", $"text")
-      .where($"doc_id" % 10 === 0)
-    val stride = base.agg(max($"doc_id")).head().getLong(0) + 1L
-    def epochBatch(e: Int): Seq[Doc] =
-      base.select(($"doc_id" + lit(e.toLong * stride)).as("doc_id"),
-        array_join(transform(TextAnalysis.tokens($"text"),
-          x => concat(x, lit("e" + e))), " ").as("text"))
-        .as[Doc].collect().toSeq
-
-    val root = java.nio.file.Files.createTempDirectory("graft-hh-stream").toString
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Doc](spark)
-    val q = Streams.heavyHittersStream(input.toDF(), s"$root/out",
-      s"$root/cp", "text", k)
-    try {
-      (0 until nEpochs).foreach { e =>
-        val batch = epochBatch(e)
-        val t0 = System.nanoTime()
-        input.addData(batch: _*)
-        q.processAllAvailable()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val summary = spark.read.parquet(s"$root/out/epoch=$e").count()
-        require(summary <= k,
-          s"summary exceeded capacity at epoch $e: $summary > $k")
-        println(f"""{"epoch":$e,"batch_docs":${batch.size},""" +
-          f""""batch_sec":$sec%.2f,"summary_rows":$summary}""")
-      }
-    } finally q.stop()
-    spark.stop()
-  }
+  private def runHeavyHitters(spark: SparkSession, sfDir: String,
+      nEpochs: Int, k: Int): Unit =
+    liveCurve(spark, "graft-hh-stream", nEpochs, freshSlices(spark, sfDir))(
+      (in, root) => Streams.heavyHittersStream(in, s"$root/out", s"$root/cp",
+        "text", k)) { (e, root) =>
+      val summary = spark.read.parquet(s"$root/out/epoch=$e").count()
+      require(summary <= k,
+        s"summary exceeded capacity at epoch $e: $summary > $k")
+      s""""summary_rows":$summary"""
+    }
 }

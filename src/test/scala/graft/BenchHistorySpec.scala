@@ -107,41 +107,28 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(Bench.defaultStealGate < 1.9)  // contaminated sessions >= 1.9
   }
 
-  test("reported: both-hot entries fall back to the ratchet best, flagged") {
-    // sweep hot AND rerun hot → the measurements are noise; report the
-    // historical floor with hot=true so a dirty sweep can't print 2x
-    assert(Bench.reported(2.0, 9.0, Some((1.9, 9.5)), Some(0.9), 4.0)
-      === ((0.9, true)))
-    // hot new query (no ratchet yet): keep the measured min, still flag
-    assert(Bench.reported(2.0, 9.0, Some((1.9, 9.5)), None, 4.0)
-      === ((1.9, true)))
-    // a hot measurement that still beats the ratchet wins (min rules)
-    assert(Bench.reported(0.5, 9.0, Some((0.6, 9.5)), Some(0.9), 4.0)
-      === ((0.5, true)))
+  test("reported: hot entries keep their measured min, flagged") {
+    // sweep hot AND rerun hot → no clean measurement exists; report the
+    // measured min with hot=true, never a historical best in its place
+    assert(Bench.reported(2.0, 9.0, Some((1.9, 9.5)), 4.0) === ((1.9, true)))
+    assert(Bench.reported(0.5, 9.0, Some((0.6, 9.5)), 4.0) === ((0.5, true)))
     // sweep hot but the rerun ran clean → the rerun is a real number
-    assert(Bench.reported(2.0, 9.0, Some((0.95, 2.0)), Some(0.9), 4.0)
-      === ((0.95, false)))
+    assert(Bench.reported(2.0, 9.0, Some((0.95, 2.0)), 4.0) === ((0.95, false)))
     // THE r13 q45 edge: hot sweep min UNDERCUTS the clean-but-slower
     // rerun — the rerun is the only clean measurement and must be
     // reported alone; min-of-two would print the hot 0.601 unflagged
-    // at 2.09x the ratchet
-    assert(Bench.reported(0.601, 4.63, Some((0.780, 2.42)), Some(0.287), 4.0)
+    assert(Bench.reported(0.601, 4.63, Some((0.780, 2.42)), 4.0)
       === ((0.780, false)))
     // the MIRROR quadrant (r14): clean sweep + HOT rerun that undercuts
-    // it — the hot rerun is box noise and must not enter the report;
-    // min-of-two would print the hot 0.601 unflagged, the exact q45
-    // shape from the other side
-    assert(Bench.reported(0.780, 2.0, Some((0.601, 9.0)), Some(0.287), 4.0)
+    // it — the hot rerun is box noise and must not enter the report
+    assert(Bench.reported(0.780, 2.0, Some((0.601, 9.0)), 4.0)
       === ((0.780, false)))
     // no rerun fired, sweep clean → plain sweep min, never flagged
-    assert(Bench.reported(1.0, 2.0, None, Some(0.9), 4.0) === ((1.0, false)))
-    // no rerun COMPLETED but the sweep was hot → no clean measurement
-    // exists; same ratchet-best + flag treatment as both-hot
-    assert(Bench.reported(2.0, 9.0, None, Some(0.9), 4.0) === ((0.9, true)))
-    assert(Bench.reported(2.0, 9.0, None, None, 4.0) === ((2.0, true)))
+    assert(Bench.reported(1.0, 2.0, None, 4.0) === ((1.0, false)))
+    // no rerun COMPLETED but the sweep was hot → the measured min, flagged
+    assert(Bench.reported(2.0, 9.0, None, 4.0) === ((2.0, true)))
     // gate disabled (<= 0) → hotMeasurement is always false
-    assert(Bench.reported(2.0, 9.0, Some((1.9, 9.5)), Some(0.9), 0.0)
-      === ((1.9, false)))
+    assert(Bench.reported(2.0, 9.0, Some((1.9, 9.5)), 0.0) === ((1.9, false)))
   }
 
   test("ratchet keeps the cross-sweep minimum and never rises") {

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession` (so every main runs the configuration and the
   * extension the tests run), and no code reaches a native function by
   * its registry name (the column helpers build the expressions
-  * directly, so a DataFrame pipeline never depends on a registry).
+  * directly, so a DataFrame pipeline never depends on a registry), and
+  * the `ScaleRehearsal*` runners take the corpus dir and the clock from
+  * the one [[Rehearsal]] scaffold.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -43,6 +45,14 @@ class SourceGuardSpec extends AnyFunSuite {
     val native = graft.functions.GraftFunctions.builders.map(_._1)
     val found = hits((_, line) =>
       native.exists(n => line.contains("call_function(\"" + n + "\"")))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("ScaleRehearsal* files use Rehearsal's sfDir and clock") {
+    val found = hits((p, line) =>
+      p.getFileName.toString.startsWith("ScaleRehearsal") &&
+        (line.contains("\"SPARK_GRAFT_SF_DIR\"") ||
+          line.contains("System.nanoTime")))
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

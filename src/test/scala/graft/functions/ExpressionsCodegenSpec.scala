@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
 /** The native expressions implement `doGenCode` (static calls into
@@ -9,14 +8,26 @@ import org.apache.spark.sql.functions._
   * runs them under `spark.sql.codegen.fallback=false`, where a Janino
   * compile error of the generated code THROWS instead of silently
   * degrading to interpreted eval — i.e. it proves the generated code
-  * actually compiles and agrees with the interpreted path.
+  * actually compiles and agrees with the interpreted path. The setting
+  * is applied to the shared test session for this suite only, and the
+  * previous value is restored when the suite ends.
   */
-class ExpressionsCodegenSpec extends AnyFunSuite {
+class ExpressionsCodegenSpec extends graft.SparkSpec with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession =
-    graft.GraftSession.builder("codegen-strict").master("local[2]")
-      .config("spark.sql.codegen.fallback", "false")
-      .getOrCreate()
+  private val fallback = "spark.sql.codegen.fallback"
+  private var previous: Option[String] = None
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    previous = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+  }
+
+  override def afterAll(): Unit =
+    try previous match {
+      case Some(v) => spark.conf.set(fallback, v)
+      case None => spark.conf.unset(fallback)
+    } finally super.afterAll()
 
   test("all native expressions compile and evaluate inside codegen") {
     import spark.implicits._

@@ -524,7 +524,7 @@ class DedupSpec extends SparkSpec {
   test("connected components: deep chain converges through checkpoints") {
     // diameter 29 forces many rounds through the localCheckpoint seam
     val chain = (0L until 29L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(chain, maxIter = 40, checkpointInterval = 5)
+    val cc = Dedup.connectedComponents(chain, maxIter = 40)
       .as[(Long, Long)].collect()
     assert(cc.length == 30)
     assert(cc.forall(_._2 == 0L), "all nodes must take the chain-min label")

@@ -94,4 +94,35 @@ class DeterminismSpec extends SparkSpec {
       Pq.fitCodebooks(d, "vec_id", "embedding", idx.centroids, m = 4,
         ksub = 16).codebooks.toSeq.map(bits))
   }
+
+  /** Sorted (doc_id, cluster_rep) of the LSH+CC clustering of `d`, with
+    * the pair ids cast to `idType` (and both columns read back as text).
+    */
+  private def clusters(d: org.apache.spark.sql.DataFrame,
+      idType: String): Seq[(String, String)] = {
+    val pairs = Dedup.minHashLsh(d, "doc_id", "text", threshold = 0.5)
+      .select($"id_a".cast(idType).as("id_a"), $"id_b".cast(idType).as("id_b"))
+    val cc = Dedup.connectedComponents(pairs)
+      .select($"doc_id".cast("string"), $"cluster_rep".cast("string"))
+      .as[(String, String)].collect().sorted.toSeq
+    assert(cc.exists { case (id, rep) => id != rep }, "no cluster to compare")
+    cc
+  }
+
+  test("CC labels are partition-order-independent, Long and string ids") {
+    stableOver(docs, $"lang")(clusters(_, "bigint"))
+    stableOver(docs, $"lang")(clusters(_, "string"))
+  }
+
+  test("CC groups the same docs under Long and string ids") {
+    // the reps legitimately differ ("10" < "9"), the member sets do not
+    def groups(cc: Seq[(String, String)]): Set[Set[String]] =
+      cc.groupBy(_._2).values.map(_.map(_._1).toSet).toSet
+    stableOver(docs, $"lang") { d =>
+      val g = groups(clusters(d, "bigint"))
+      assert(g == groups(clusters(d, "string")),
+        "Long and string ids grouped the docs differently")
+      Seq(g)
+    }
+  }
 }
