@@ -25,24 +25,17 @@ object ConnectorRunner {
   /** Resolve a secret from the environment; never log the value. */
   def secret(name: String): Option[String] = sys.env.get(name)
 
-  /** Extract → Transform → Load → V2 consistency check. */
+  /** Extract → Transform → Load, as one write: the sink runs the
+    * transformed frame once, so the source (for an HTTP source, every
+    * page against a rate-limited API) is read once. An empty payload is a
+    * valid outcome, not an error (README.md:33): the sink commits nothing
+    * for it and reports 0 rows ([[GraftSink.write]]).
+    */
   def run(spark: SparkSession, cfg: ConnectorConfig): Result = {
     val missing = cfg.requiredEnv.filterNot(sys.env.contains)
     require(missing.isEmpty, s"connector ${cfg.name}: missing env ${missing.mkString(",")}")
-    val raw = cfg.source(spark)
-    // persist: isEmpty and the sink's write would otherwise each
-    // re-execute the source — for an HTTP source that re-fetches every
-    // page against a rate-limited API
-    val transformed = Transforms.pipeline(cfg.stages: _*)(raw).persist()
-    try {
-      // Empty-payload short-circuit (README.md:33): nothing to load is a
-      // valid outcome, not an error.
-      if (transformed.isEmpty) Result(cfg.name, 0L, consistent = true)
-      else {
-        val n = cfg.sink.write(transformed)
-        Result(cfg.name, n, consistent = n >= 0)
-      }
-    } finally transformed.unpersist()
+    val n = cfg.sink.write(Transforms.pipeline(cfg.stages: _*)(cfg.source(spark)))
+    Result(cfg.name, n, consistent = n >= 0)
   }
 
   /** Full consistency verification against sink contents (V2). */

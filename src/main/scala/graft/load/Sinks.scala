@@ -1,9 +1,11 @@
 package graft.load
 
 import java.io.{File, IOException}
+import java.nio.file.FileAlreadyExistsException
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's Load stage (README.md:24, :27-29): insert transformed
   * documents into a named collection, with idempotent re-load (L2) and a
@@ -14,7 +16,11 @@ import org.apache.spark.sql.functions._
   * parquet so the rest of the pipeline is identical.
   */
 trait GraftSink {
-  /** Write a batch; returns the number of rows written. */
+  /** Loads one batch and returns the number of rows it wrote. `df` is
+    * run once. An empty batch is a valid load that commits nothing: the
+    * collection is left exactly as it was (a missing one is not
+    * created), and the result is 0.
+    */
   def write(df: DataFrame): Long
 }
 
@@ -27,6 +33,101 @@ object GraftSink {
     val obs = Observation()
     save(df.observe(obs, count(lit(1)).as("rows")))
     obs.get("rows").asInstanceOf[Long]
+  }
+}
+
+/** The sinks' crash-safe commits. A load is written into a staging
+  * directory beside the collection at `path`; the staging write's
+  * `_SUCCESS` marker is its commit point, and only a load that wrote
+  * rows is committed:
+  *  - [[replace]] stages into `<path>.staging`, then renames
+  *    `path -> <path>.old` and `.staging -> path`, and deletes `.old`;
+  *  - [[append]] stages into `<path>.append`, then moves its data files
+  *    into `path` one by one and deletes `.append`.
+  * `path` is never rewritten in place. Every commit first runs
+  * [[recover]], which finishes or undoes a commit that a crash cut
+  * short. The two staging names keep a crashed swap and a crashed
+  * append apart.
+  */
+private[load] object StagedCommit {
+
+  /** Replaces the collection at `path` by what `stage(dir)` writes into
+    * `dir`, when it reports more than 0 rows; returns that count.
+    */
+  def replace(path: String)(stage: String => Long): Long = {
+    val live = new File(path)
+    val staging = new File(path + ".staging")
+    val old = new File(path + ".old")
+    recover(path)
+    val n = stage(staging.getPath)
+    if (n > 0) {
+      if (live.exists()) rename(live, old)
+      rename(staging, live)
+    }
+    deleteRecursively(staging)
+    deleteRecursively(old)
+    n
+  }
+
+  /** Adds the files `stage(dir)` writes into `dir` to the collection at
+    * `path`, when it reports more than 0 rows; returns that count.
+    */
+  def append(path: String)(stage: String => Long): Long = {
+    val staging = new File(path + ".append")
+    recover(path)
+    val n = stage(staging.getPath)
+    if (n > 0) moveFiles(staging, new File(path))
+    deleteRecursively(staging)
+    n
+  }
+
+  /** Brings `path` to a committed state after a crash at any point of
+    * either commit:
+    *  - `path` present: a `.staging`, complete or not, is a load whose
+    *    swap never began (its call never returned), and an `.old` is the
+    *    previous collection of a finished swap; both are deleted;
+    *  - `path` missing, `.staging` complete: the crash came between the
+    *    two renames, or before a first load's only rename; roll forward
+    *    by renaming `.staging` to `path`, then delete any `.old`;
+    *  - `path` missing, `.staging` incomplete or absent, `.old` present:
+    *    roll back by renaming `.old` to `path`;
+    *  - `.append` complete: roll forward by moving its remaining files
+    *    (a moved file is gone from `.append`, so this is idempotent);
+    *    `.append` incomplete: delete it.
+    * Without this, a crash between the renames would make the next load
+    * see no collection and keep only its own batch.
+    */
+  private def recover(path: String): Unit = {
+    val live = new File(path)
+    val staging = new File(path + ".staging")
+    val old = new File(path + ".old")
+    if (!live.exists()) {
+      if (committed(staging)) rename(staging, live)
+      else if (old.exists()) rename(old, live)
+    }
+    deleteRecursively(staging)
+    deleteRecursively(old)
+    val appending = new File(path + ".append")
+    if (committed(appending)) moveFiles(appending, live)
+    deleteRecursively(appending)
+  }
+
+  private def committed(staging: File): Boolean = new File(staging, "_SUCCESS").exists()
+
+  /** Moves every file of `from` but its `_SUCCESS` marker into `to`. */
+  private def moveFiles(from: File, to: File): Unit = {
+    if (!to.isDirectory && !to.mkdirs()) throw new IOException(s"sink: cannot create $to")
+    Option(from.listFiles()).toSeq.flatten
+      .filter(f => f.isFile && f.getName != "_SUCCESS" && f.getName != "._SUCCESS.crc")
+      .foreach(f => rename(f, new File(to, f.getName)))
+  }
+
+  private def rename(from: File, to: File): Unit =
+    if (!from.renameTo(to)) throw new IOException(s"sink: cannot rename $from to $to")
+
+  private def deleteRecursively(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
+    f.delete(): Unit
   }
 }
 
@@ -47,12 +148,31 @@ final case class ParquetSink(path: String, mode: SaveMode = SaveMode.Append)
   * behavior every plan spec in this repo asserts for parquet. The
   * row-based formats (csv/json) ride the same code path for
   * interchange use; they trade the columnar properties away.
+  *
+  * A load is one Spark action: one write into a staging directory, whose
+  * row count rides the write as an [[Observation]]. That count decides
+  * the commit ([[StagedCommit]]): a load of 0 rows deletes its staging
+  * directory and leaves `path` as it was. `Append` moves the staged data
+  * files into `path`; `Overwrite` swaps the staged directory in. For an
+  * existing `path`, `ErrorIfExists` throws and `Ignore` writes nothing,
+  * as in Spark; for a missing one, both load like `Overwrite`.
   */
 final case class FormatSink(path: String, format: String,
     mode: SaveMode = SaveMode.Append,
     options: Map[String, String] = Map.empty) extends GraftSink {
-  def write(df: DataFrame): Long =
-    GraftSink.countingWrite(df)(_.write.mode(mode).options(options).format(format).save(path))
+  def write(df: DataFrame): Long = {
+    def stage(dir: String): Long =
+      GraftSink.countingWrite(df)(_.write.options(options).format(format).save(dir))
+    mode match {
+      case SaveMode.Append => StagedCommit.append(path)(stage)
+      case SaveMode.Overwrite => StagedCommit.replace(path)(stage)
+      case _ => StagedCommit.replace(path) { dir =>
+        if (!new File(path).exists()) stage(dir)
+        else if (mode == SaveMode.Ignore) 0L
+        else throw new FileAlreadyExistsException(path, null, s"$mode: $path already exists")
+      }
+    }
+  }
 }
 
 /** L2 — idempotent keyed upsert: incoming rows win over existing rows
@@ -68,58 +188,29 @@ final case class FormatSink(path: String, format: String,
   * copy-on-write) would need a per-file key index, which the sink does
   * not keep.
   *
-  * Commit protocol. The merged collection is written to
-  * `<path>.staging`, whose parquet `_SUCCESS` marker is the commit
-  * point; then `rename(path -> path.old)`, `rename(staging -> path)`,
-  * delete `.old`. `path` is never rewritten in place, and `.old` only
-  * exists once the staging write has committed. Every write first
-  * recovers from a crash at any of these points:
-  *  - `path` present: a `.staging`, complete or not, is a load whose
-  *    swap never began (its call never returned), and an `.old` is the
-  *    previous collection of a finished swap; both are deleted;
-  *  - `path` missing, `.staging` complete: the crash came between the
-  *    two renames, or before a first load's only rename; roll forward by
-  *    renaming `.staging` to `path`, then delete any `.old`;
-  *  - `path` missing, `.staging` incomplete or absent, `.old` present:
-  *    roll back by renaming `.old` to `path`.
-  * Without this, a crash between the renames would make the next load
-  * see no collection and keep only its own batch.
+  * The merge reads the batch twice (its keys for the broadcast, its rows
+  * for the union), so the sink persists the batch unless the caller
+  * already has. An emptiness probe on the persisted batch fills the cache
+  * both reads use, and an empty batch stops there: it never rewrites the
+  * collection. A non-empty one commits through [[StagedCommit.replace]]'s
+  * crash-safe directory swap.
   */
 final case class UpsertParquetSink(path: String, keys: Seq[String])
     extends GraftSink {
   def write(incoming: DataFrame): Long = {
-    val live = new File(path)
-    val staging = new File(path + ".staging")
-    val old = new File(path + ".old")
-    recover(live, staging, old)
-    val exists = live.exists()
-    val merged =
-      if (!exists) incoming
-      else incoming.sparkSession.read.parquet(path)
-        .join(broadcast(incoming.select(keys.map(incoming.col): _*)), keys, "left_anti")
-        .unionByName(incoming)
-    val n = GraftSink.countingWrite(merged)(_.write.parquet(staging.getPath))
-    if (exists) rename(live, old)
-    rename(staging, live)
-    deleteRecursively(old)
-    n
-  }
-
-  private def recover(live: File, staging: File, old: File): Unit = {
-    if (!live.exists()) {
-      if (new File(staging, "_SUCCESS").exists()) rename(staging, live)
-      else if (old.exists()) rename(old, live)
-    }
-    deleteRecursively(staging)
-    deleteRecursively(old)
-  }
-
-  private def rename(from: File, to: File): Unit =
-    if (!from.renameTo(to)) throw new IOException(s"upsert: cannot rename $from to $to")
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(): Unit
+    val owned = incoming.storageLevel == StorageLevel.NONE
+    val batch = if (owned) incoming.persist() else incoming
+    try StagedCommit.replace(path) { staging =>
+      if (batch.isEmpty) 0L
+      else {
+        val merged =
+          if (!new File(path).exists()) batch
+          else batch.sparkSession.read.parquet(path)
+            .join(broadcast(batch.select(keys.map(batch.col): _*)), keys, "left_anti")
+            .unionByName(batch)
+        GraftSink.countingWrite(merged)(_.write.parquet(staging))
+      }
+    } finally if (owned) batch.unpersist(): Unit
   }
 }
 

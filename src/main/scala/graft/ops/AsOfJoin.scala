@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
-import graft.plans.{AsOfJoinNode, AsOfJoinStrategy}
+import graft.plans.AsOfJoinNode
 
 /** As-of join: for every left row, attach the most recent right row with
   * `rightTime <= leftTime` (within the same partition keys).
@@ -88,7 +88,6 @@ object AsOfJoin {
       tolerance: Option[java.time.Duration] = None,
       forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    PlanBridge.ensureStrategy(spark, new AsOfJoinStrategy)
     // alias the right side's columns: fresh exprIds make self-joins
     // (left and right reading the same table) unambiguous
     val rCols = ((keys :+ timeCol) ++ payload).distinct

@@ -48,6 +48,17 @@ object Dedup {
   def shingleHashSet(text: Column, shingleSize: Int): Column =
     GraftFunctions.ngramHashes(TextAnalysis.tokens(text), shingleSize)
 
+  /** Staged `cols` plus `h`, the [[shingleHashSet]] of `text`, for the
+    * documents whose set is non-empty. The filter reads the staged frame:
+    * written over the projection, predicate pushdown would inline `h`
+    * into it, and the tokenizer and `ngram_hashes` would run twice per
+    * document.
+    */
+  private[ops] def stagedShingleSets(df: DataFrame, text: Column,
+      shingleSize: Int, cols: Column*): DataFrame =
+    stage(df.select(cols :+ shingleHashSet(text, shingleSize).as("h"): _*))
+      .where(size(col("h")) > 0)
+
   /** MinHash signature over the hashed shingle set — a native Catalyst
     * expression ([[graft.functions.MinHashSig]]): one eval per row, a
     * primitive numHashes × |set| loop. The interpreted HOF formulation
@@ -83,9 +94,7 @@ object Dedup {
     // REVERTED — at bench scale the added exchange + 32-task stages on
     // every downstream cache read cost more than the ~0.3 s of
     // single-threaded projection they parallelize.)
-    val docs = stage(df
-      .select(col(idCol).as("id"), shingleHashSet(col(textCol), shingleSize).as("h"))
-      .where(size(col("h")) > 0))
+    val docs = stagedShingleSets(df, col(textCol), shingleSize, col(idCol).as("id"))
 
     // staged: feeds the hot-bucket count + both sides of the self-join;
     // (id, band_idx, band_key) rows only — the signature itself never
@@ -155,10 +164,7 @@ object Dedup {
   def exactJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3,
       maxBucket: Int = 100000): DataFrame = {
-    val docs = stage(df
-      .select(col(idCol).as("id"),
-        shingleHashSet(col(textCol), shingleSize).as("h"))
-      .where(size(col("h")) > 0))
+    val docs = stagedShingleSets(df, col(textCol), shingleSize, col(idCol).as("id"))
     val inv = docs.select(col("id"), explode(col("h")).as("s"))
     val capped = dropHotBuckets(inv, Seq("s"), maxBucket)
     val candidates = capped.as("x")
@@ -933,9 +939,8 @@ object Dedup {
       bands: Int = 32, rowsPerBand: Int = 4, shingleSize: Int = 3,
       maxBucket: Int = 10000): DataFrame = {
     val spark = newDocs.sparkSession
-    val newShingles = stage(newDocs
-      .select(col(idCol).as("id"), shingleHashSet(col(textCol), shingleSize).as("h"))
-      .where(size(col("h")) > 0))
+    val newShingles = stagedShingleSets(newDocs, col(textCol), shingleSize,
+      col(idCol).as("id"))
     val newBands = stage(newShingles
       .withColumn("sig", minHashSignatureFromHashes(col("h"), bands * rowsPerBand))
       .select(col("id"),
@@ -1032,9 +1037,7 @@ object Dedup {
     withAppendLock(spark, indexPath) {
       // staged: the shingle append, the band derivation, and the stats
       // delta all read this batch-sized frame
-      val docs = stage(newDocs
-        .select(col(idCol).as("id"), shingleHashSet(col(textCol), shingleSize).as("h"))
-        .where(size(col("h")) > 0))
+      val docs = stagedShingleSets(newDocs, col(textCol), shingleSize, col(idCol).as("id"))
       appendBucketedIndex(
         docs.join(readIndexTable(spark, s"$indexPath/shingles")
           .select(col("id")), Seq("id"), "left_anti"),
@@ -1078,10 +1081,9 @@ object Dedup {
       n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     // staged: feeds the prefix explode + both sides of the verify join
-    val docs = stage(df.select(col(idCol).as("id"), col(blockCol).as("block"),
-      shingleHashSet(col(textCol), n).as("h"))
-      .where(size(col("h")) > 0)
-      .withColumn("hn", size(col("h"))))
+    val docs = stagedShingleSets(df, col(textCol), n,
+      col(idCol).as("id"), col(blockCol).as("block"))
+      .withColumn("hn", size(col("h")))
     val prefixLen = (col("hn") - ceil(col("hn") * lit(threshold)) + 1).cast("int")
     val pref = docs.select(col("id"), col("block"), col("hn"),
       explode(slice(col("h"), lit(1), prefixLen)).as("tok"))

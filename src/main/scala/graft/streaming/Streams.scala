@@ -1622,8 +1622,9 @@ object Streams {
     * are skipped: a watermarked stateful query runs a no-data batch to
     * evict state, and a keyed upsert sink would rewrite its whole
     * collection for it. The batch is held across the check and the
-    * write (as `ConnectorRunner.run` does), so the check does not
-    * re-run the batch's plan.
+    * write, so the check does not re-run the batch's plan, and a sink
+    * that would hold its batch itself ([[graft.load.UpsertParquetSink]])
+    * reads this cache instead.
     */
   def sinkStream(df: DataFrame, sink: GraftSink, checkpoint: String): StreamingQuery =
     df.writeStream

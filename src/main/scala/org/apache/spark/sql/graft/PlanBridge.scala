@@ -4,14 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSparkSession}
-import org.apache.spark.sql.execution.SparkStrategy
 
 /** Minimal bridge into `private[sql]` Spark internals, kept in an
   * `org.apache.spark.sql` subpackage on purpose (the standard pattern
-  * used by Spark-native libraries: the two touched entry points —
+  * used by Spark-native libraries: the touched entry points —
   * `Dataset.ofRows` to wrap a custom [[LogicalPlan]] in a DataFrame and
-  * strategy registration — have no public equivalent). Everything else
-  * in graft sticks to the public API; keep this file tiny.
+  * the Column ↔ Expression conversions — have no public equivalent).
+  * Planner strategies are not installed here: `graft.GraftExtensions`
+  * injects them into every session `graft.GraftSession` builds.
+  * Everything else in graft sticks to the public API; keep this file
+  * tiny.
   */
 object PlanBridge {
 
@@ -24,14 +26,4 @@ object PlanBridge {
   /** Column ↔ Expression bridge (both directions are `private[sql]`). */
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Idempotently add a planner strategy to a live session (the
-    * programmatic path; `spark.sql.extensions=graft.GraftExtensions`
-    * is the config-time path).
-    */
-  def ensureStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[ClassicSparkSession]
-    if (!cs.experimental.extraStrategies.exists(_.getClass == strategy.getClass))
-      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
-  }
 }

@@ -121,6 +121,62 @@ class SinksSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("overwrite and append recover from a crash at each point of their commits") {
+    import org.apache.spark.sql.SaveMode
+    def write(rows: Seq[(Long, String)], dir: String): Unit =
+      rows.toDF("id", "v").repartition(3).write.parquet(dir)
+    def read(dir: String): Seq[(Long, String)] =
+      spark.read.parquet(dir).as[(Long, String)].collect().toSeq.sorted
+    def dataFiles(dir: String): Seq[File] =
+      new File(dir).listFiles().toSeq.filter(_.getName.startsWith("part-"))
+    val base = Seq(1L -> "a", 2L -> "b")
+    // a load staged, but never acknowledged, before the crash
+    val staged = Seq(4L -> "d", 5L -> "e", 6L -> "f")
+    val batch = Seq(2L -> "B", 3L -> "c")
+    // (state, mode, crash state, the collection once recovered)
+    val cases: Seq[(String, SaveMode, String => Unit, Seq[(Long, String)])] = Seq(
+      ("overwrite (a) staging complete, path present", SaveMode.Overwrite,
+        p => { write(base, p); write(staged, p + ".staging") }, base),
+      ("overwrite (b) path renamed to .old, staging complete", SaveMode.Overwrite,
+        p => { write(base, p + ".old"); write(staged, p + ".staging") }, staged),
+      ("overwrite (c) staging without _SUCCESS, path present", SaveMode.Overwrite,
+        p => {
+          write(base, p); write(staged, p + ".staging")
+          assert(new File(p + ".staging/_SUCCESS").delete())
+        }, base),
+      ("overwrite (d) only .old present", SaveMode.Overwrite,
+        p => write(base, p + ".old"), base),
+      ("append (e) complete staging, partly moved", SaveMode.Append,
+        p => {
+          write(base, p); write(staged, p + ".append")
+          val files = dataFiles(p + ".append")
+          assert(files.size > 1, "the staged load spans several files")
+          val f = files.head
+          assert(f.renameTo(new File(p, f.getName)))
+          new File(f.getParent, s".${f.getName}.crc").renameTo(new File(p, s".${f.getName}.crc"))
+        }, base ++ staged),
+      ("append (f) staging without _SUCCESS", SaveMode.Append,
+        p => {
+          write(base, p); write(staged, p + ".append")
+          assert(new File(p + ".append/_SUCCESS").delete())
+        }, base))
+    for ((state, mode, setUp, recovered) <- cases) {
+      val path = Files.createTempDirectory("graft-sink-crash").toString + "/coll"
+      setUp(path)
+      def clean(when: String): Unit =
+        assert(Seq(".staging", ".old", ".append").forall(s => !new File(path + s).exists()),
+          s"$state: $when leaves no staging directory")
+      // an empty load commits nothing, so it shows what recovery made of the crash
+      assert(ParquetSink(path, mode).write(Seq.empty[(Long, String)].toDF("id", "v")) == 0)
+      assert(read(path) == recovered.sorted, s"$state: recovered collection")
+      clean("recovery")
+      assert(ParquetSink(path, mode).write(batch.toDF("id", "v")) == batch.size, state)
+      val expected = if (mode == SaveMode.Overwrite) batch else recovered ++ batch
+      assert(read(path) == expected.sorted, s"$state: collection after the load")
+      clean("the commit")
+    }
+  }
+
   test("bucketed tables join without a shuffle exchange") {
     val wh = Files.createTempDirectory("graft-warehouse").toString
     val s2 = graft.GraftSession.builder("graft-bucketing")

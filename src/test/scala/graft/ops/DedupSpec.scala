@@ -45,6 +45,41 @@ class DedupSpec extends SparkSpec {
     assert(j == 1.0)
   }
 
+  test("staged shingle sets evaluate ngram_hashes once per document") {
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val aqe = new AdaptiveSparkPlanHelper {}
+    /** `ngram_hashes` evaluations per row: in projections and filters (a
+      * scan's data filters list the predicate too, but parquet cannot
+      * evaluate it).
+      */
+    def ngramCalls(plan: SparkPlan): Int =
+      aqe.collect(plan) { case p @ (_: ProjectExec | _: FilterExec) =>
+        p.expressions.map(_.collect { case n: graft.functions.NgramHashes => n }.size).sum
+      }.sum
+    // read from files: over a local relation the optimizer would fold the sets away
+    val dir = java.nio.file.Files.createTempDirectory("graft-shingles").toString + "/docs"
+    corpus.union(Seq((6L, ""), (7L, "   ")).toDF("doc_id", "text")).write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    // the control: over the projection, pushdown inlines the set into the filter
+    val unstaged = docs.select(col("doc_id").as("id"),
+        Dedup.shingleHashSet(col("text"), 3).as("h"))
+      .where(size(col("h")) > 0)
+    assert(ngramCalls(unstaged.queryExecution.executedPlan) == 2)
+
+    val sets = Dedup.stagedShingleSets(docs, col("text"), 3, col("doc_id").as("id"))
+    try {
+      val cached = sets.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      assert(cached.size == 1, "the shingle sets are staged")
+      assert(ngramCalls(cached.head.cachedPlan) == 1, "the staged plan computes h once")
+      assert(ngramCalls(sets.queryExecution.executedPlan) == 0,
+        "the filter reads the staged h")
+      assert(sets.select("id").as[Long].collect().sorted.toSeq == (0L to 5L),
+        "documents without a shingle drop")
+    } finally Staged.release()
+  }
+
   test("exactJaccardPairs: complete ground truth, same metric as the LSH verify") {
     // truth must hold every pair >= t regardless of banding — on the
     // fixture it equals the LSH result at a full-recall config, and it
